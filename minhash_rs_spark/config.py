@@ -3,7 +3,7 @@
 Mirrors the reference's YAML config surface so configs translate 1:1
 (reference: /root/reference/src/main.rs:254-289 `Config`), plus the
 Spark-native knobs called for by the north rule (jaccard verification,
-salting, checkpointing, alternative dedup methods).
+checkpointing, alternative dedup methods).
 """
 
 from __future__ import annotations
@@ -43,7 +43,6 @@ class MinHashConfig:
                            offline true-jacc, src/main.rs:1573-1677,
                            into the pipeline). None disables
                            verification = reference-parity clustering.
-        salt_buckets       salt factor for hot-LSH-band aggregation.
         checkpoint_dir     per-stage checkpoint tables + manifest
                            (Spark analog of the reference's phase files,
                            src/main.rs:411-429 + python/orchestration.py).
@@ -71,17 +70,12 @@ class MinHashConfig:
 
     # Spark-native additions
     jaccard_threshold: Optional[float] = None
-    # salt_buckets=0: rely on map-side partial aggregation (min/count are
-    # algebraic, so hot LSH buckets collapse before the shuffle —
-    # measured faster than salting, which doubles shuffle volume).
-    # Set >1 to force the explicit two-phase salted groupBy when the
-    # bucket aggregate is extended with non-algebraic state.
-    salt_buckets: int = 0
     checkpoint_dir: Optional[str] = None
     max_shingles_per_doc: Optional[int] = None
     # verified path only: buckets up to this size get all within-bucket
     # candidate pairs (exact within-bucket recall); bigger buckets fall
-    # back to star + salted sub-star edges (operators/lsh.pair_edges)
+    # back to star + salted sub-star + chain edges
+    # (operators/lsh.bucket_pair_edges)
     verify_pair_cap: int = 32
 
     # dup-aware subsample (ref: src/dup_aware_subsample.rs:142-160)

@@ -277,6 +277,18 @@ def compact_history(spark: SparkSession, cfg: MinHashConfig,
     fresh = not out.committed("sigs")
     sigs = reduce(DataFrame.unionByName, [c.table("sigs") for c in ckpts])
     out.stage("sigs", lambda: sigs)
+    # record the input list as soon as THIS run committed sigs — before
+    # the shingles check below can raise — so a re-run with a different
+    # list trips the guard instead of resuming these sigs; the latest
+    # record wins (recorded[-1]). A crash inside the sigs stage leaves
+    # no record and the half-built out_token recomputes on retry.
+    # Pre-guard compactions (committed but unrecorded) stay unrecorded:
+    # fabricating provenance for bytes we didn't build would legitimize
+    # exactly the stale history the guard catches.
+    if fresh:
+        out._append_manifest({"fingerprint": out.fingerprint,
+                              "stage": "_compact_inputs",
+                              "compact_inputs": wanted})
     if all(c.committed("shingles") for c in ckpts):
         sh = reduce(DataFrame.unionByName,
                     [c.table("shingles") for c in ckpts])
@@ -286,17 +298,6 @@ def compact_history(spark: SparkSession, cfg: MinHashConfig,
             "verified config but some input tokens have no committed "
             "shingles stage — compact from tokens that ran upto='sigs' "
             "with the same verified config")
-    # record the input list only AFTER every stage committed, and only
-    # when THIS run built the compaction (a crash mid-compaction must
-    # leave no record: the half-built out_token then recomputes cleanly
-    # on any retry instead of tripping — or worse, disarming — the
-    # mismatch guard). Pre-guard compactions (committed but unrecorded)
-    # stay unrecorded: fabricating provenance for bytes we didn't build
-    # would legitimize exactly the stale history the guard catches.
-    if fresh and not recorded:
-        out._append_manifest({"fingerprint": out.fingerprint,
-                              "stage": "_compact_inputs",
-                              "compact_inputs": wanted})
     return out_token
 
 

@@ -1,28 +1,45 @@
-"""G2/J1 — LSH bucketing and star-edge extraction.
+"""G2/J1 — LSH bucketing and candidate-edge generation.
 
 The reference buckets signature records per (band, sig) into a DashMap
 and chains consecutive members as edges (src/main.rs:814-887,
-1024-1042). Spark version:
+1024-1042). Spark version: every path starts from one bucket aggregate
+over member rows keyed by `key_cols`,
 
-  sigs(conv_id, band_id, sig_hi, sig_lo)
-    -> groupBy(band_id, sig_hi, sig_lo): rep = min(conv_id), cnt
-       [partial/map-side aggregation collapses hot buckets before the
-        shuffle — min/count are algebraic, so a mega-bucket costs one
-        record per input partition, not a shuffled mega-group]
-    -> keep cnt > 1 (P4 group-size predicate, src/main.rs:847-851)
-    -> join back to sigs on the bucket key to emit STAR edges
-       (member, rep): linear in bucket size, same clique-connectivity
-       as the reference's chained pairs (src/main.rs:1031-1039) but
-       rooted at the bucket minimum -> deterministic.
-       The join is where a hot bucket skews; AQE skew-join splitting
-       handles it (spark.sql.adaptive.skewJoin, enabled in session.py).
-    -> distinct() across bands (the reference re-unites the same pair
-       once per band — harmless in its UF, wasteful for our verification
-       stage; SURVEY §4 "dedup of candidate pairs").
+    groupBy(key...): rep = min(conv_id), cnt;  keep cnt > 1
 
-At 100 TB scale: the bucket key is 128-bit (sig_hi, sig_lo) + band_id —
-buckets never falsely merge; star edges bound output at O(N * num_bands)
-rows regardless of bucket skew.
+(the P4 group-size predicate, src/main.rs:847-851). min/count are
+algebraic, so map-side partial aggregation collapses a hot bucket to
+one record per input partition before the shuffle, and AQE
+(session.py) skew-splits the equi-join back onto the members.
+
+Two edge shapes are built on it:
+
+  * star_edges — unverified, reference-parity path: (member, rep)
+    edges. Linear in bucket size, same transitive closure as the
+    reference's chained pairs (src/main.rs:1031-1039), rooted at the
+    bucket minimum -> deterministic.
+  * bucket_pair_edges — verified path, shared by both key shapes:
+    minhash bands (BUCKET_KEY, via pair_edges) and SimHash pigeonhole
+    blocks (operators/simhash). Star edges are wrong under verification
+    (an outlier bucket-min loses every pair through it), so buckets
+    with cnt <= pair_cap get ALL within-bucket pairs — exact
+    within-bucket recall, at most (pair_cap-1)/2 edges per member row.
+    Buckets above pair_cap (rare; at a 128-bit band key overwhelmingly
+    true-dup crowds) get star + salted sub-star + the salt-local chain
+    (chain_edges): a linear 3 edges per member. k verification-failing
+    interior outliers split the chain into at most k+1 runs, which the
+    star/sub-star edges then usually re-join — exhaustive only for
+    pairs within a run, a bound confined to cnt > pair_cap. No chain
+    window task ever sees more than ~cnt/chain_salt members.
+
+The bucket aggregate of bucket_pair_edges is pinned (localCheckpoint)
+before anything branches on it: the giant-bucket emptiness check and
+every branch read the same rows, so the small/giant split can never
+disagree with itself if the members' lineage is recomputed.
+
+All outputs are distinct and oriented src > dst, ready for CC. At
+100 TB scale the band key is 128-bit (sig_hi, sig_lo) + band_id —
+buckets never falsely merge.
 """
 
 from __future__ import annotations
@@ -86,36 +103,20 @@ def chain_edges(members: DataFrame, key_cols: list[str],
     return intra.union(cross)
 
 
-def lsh_buckets(sigs: DataFrame, salt_buckets: int = 0) -> DataFrame:
-    """Bucket stats: (band_id, sig_hi, sig_lo, rep, cnt) for cnt > 1.
-
-    salt_buckets > 0 adds an explicit two-phase salted aggregation
-    (north rule): phase 1 groups on (bucket key, salt=xxhash(conv_id)%S)
-    so a degenerate mega-bucket (e.g. all-empty docs) is reduced by S
-    parallel tasks before the final combine. With plain min/count Spark's
-    map-side partial aggregation already bounds the skew, so salting is
-    belt-and-braces — it matters when this operator is extended with
-    non-algebraic aggregates.
-    """
-    if salt_buckets and salt_buckets > 1:
-        phase1 = (
-            sigs.withColumn("_salt", F.pmod(F.xxhash64("conv_id"),
-                                            F.lit(salt_buckets)))
-            .groupBy(*BUCKET_KEY, "_salt")
-            .agg(F.min("conv_id").alias("rep_p"), F.count(F.lit(1)).alias("cnt_p"))
-        )
-        return (phase1.groupBy(*BUCKET_KEY)
-                .agg(F.min("rep_p").alias("rep"), F.sum("cnt_p").alias("cnt"))
-                .where(F.col("cnt") > 1))
-    return (
-        sigs.groupBy(*BUCKET_KEY)
-        .agg(F.min("conv_id").alias("rep"), F.count(F.lit(1)).alias("cnt"))
-        .where(F.col("cnt") > 1)
-    )
+def _bucket_stats(members: DataFrame, key_cols: list[str]) -> DataFrame:
+    """(key..., rep=min(conv_id), cnt) for buckets with cnt > 1."""
+    return (members.groupBy(*key_cols)
+            .agg(F.min("conv_id").alias("rep"),
+                 F.count(F.lit(1)).alias("cnt"))
+            .where(F.col("cnt") > 1))
 
 
-def star_edges(sigs: DataFrame, buckets: DataFrame | None = None,
-               salt_buckets: int = 0) -> DataFrame:
+def lsh_buckets(sigs: DataFrame) -> DataFrame:
+    """Bucket stats: (band_id, sig_hi, sig_lo, rep, cnt) for cnt > 1."""
+    return _bucket_stats(sigs, BUCKET_KEY)
+
+
+def star_edges(sigs: DataFrame) -> DataFrame:
     """Candidate-duplicate edges (src, dst=bucket-min), distinct.
 
     src > dst by construction (rep is the bucket min), so edges are
@@ -128,105 +129,71 @@ def star_edges(sigs: DataFrame, buckets: DataFrame | None = None,
     When edges are to be PRUNED by verification, star edges lose pairs
     whose bucket-min is an outlier — use pair_edges instead.
     """
-    if buckets is None:
-        buckets = lsh_buckets(sigs, salt_buckets)
     return (
-        sigs.join(buckets.select(*BUCKET_KEY, "rep"), BUCKET_KEY)
+        sigs.join(lsh_buckets(sigs).select(*BUCKET_KEY, "rep"), BUCKET_KEY)
         .where(F.col("conv_id") != F.col("rep"))
         .select(F.col("conv_id").alias("src"), F.col("rep").alias("dst"))
         .distinct()
     )
 
 
-def pair_edges(sigs: DataFrame, buckets: DataFrame | None = None,
-               salt_buckets: int = 0, pair_cap: int = 32,
-               sub_salt: int = 16, chain: bool = True,
-               probe_giants: bool = True) -> DataFrame:
-    """Candidate edges for the VERIFIED path (jaccard_threshold set).
+def bucket_pair_edges(members: DataFrame, key_cols: list[str],
+                      pair_cap: int, sub_salt: int = 16,
+                      chain: bool = True) -> DataFrame:
+    """Verified-path candidate edges over member rows (key..., conv_id):
+    all within-bucket pairs for buckets with cnt <= pair_cap, plus star
+    to the bucket min, salted sub-star (min per (bucket,
+    xxhash(conv_id) % sub_salt)) and the salt-local chain for buckets
+    above it (module doc). chain=False drops the chain (tests use it to
+    show the salt-straddle hole the chain closes).
+
+    Eager: one job pins the bucket aggregate and one reads the pin to
+    decide whether any bucket exceeds pair_cap. When none does — the
+    common case at any healthy pair_cap — the result is the all-pairs
+    branch alone; the giant-bucket branches could only emit rows for
+    cnt > pair_cap buckets, so the edge set is identical.
+    """
+    buckets = _bucket_stats(members, key_cols).localCheckpoint()
+    small = buckets.where(F.col("cnt") <= pair_cap).select(*key_cols)
+    sm = members.join(small, key_cols).select(*key_cols, "conv_id")
+    out = (sm.join(sm.select(*key_cols, F.col("conv_id").alias("dst")),
+                   key_cols)
+           .where(F.col("conv_id") > F.col("dst"))
+           .select(F.col("conv_id").alias("src"), "dst"))
+    big = buckets.where(F.col("cnt") > pair_cap).select(*key_cols, "rep")
+    if big.isEmpty():
+        return out.distinct()
+
+    bm = (members.join(big, key_cols)
+          .select(*key_cols, "conv_id", "rep",
+                  F.pmod(F.xxhash64("conv_id"),
+                         F.lit(sub_salt)).alias("_salt")))
+    star = (bm.where(F.col("conv_id") != F.col("rep"))
+            .select(F.col("conv_id").alias("src"), F.col("rep").alias("dst")))
+    sub_reps = (bm.groupBy(*key_cols, "_salt")
+                .agg(F.min("conv_id").alias("srep")))
+    sub_star = (bm.join(sub_reps, [*key_cols, "_salt"])
+                .where(F.col("conv_id") != F.col("srep"))
+                .select(F.col("conv_id").alias("src"),
+                        F.col("srep").alias("dst")))
+    out = out.union(star).union(sub_star)
+    if chain:
+        # rep excluded: served by star edges; see chain_edges docstring
+        out = out.union(chain_edges(
+            bm.where(F.col("conv_id") != F.col("rep"))
+              .select(*key_cols, "conv_id"),
+            key_cols))
+    return out.distinct()
+
+
+def pair_edges(sigs: DataFrame, pair_cap: int = 32, sub_salt: int = 16,
+               chain: bool = True) -> DataFrame:
+    """Candidate edges for the VERIFIED path (jaccard_threshold set):
+    bucket_pair_edges over the LSH band buckets.
 
     Rep-anchored star edges are wrong under verification: a pair (b, c)
     in one bucket is reachable only through b—rep and c—rep, and if the
     bucket min `rep` happens to be a band false-positive far from both,
     verification prunes both edges and the true pair (b, c) is lost.
-
-    Shape here:
-      * buckets with cnt <= pair_cap: ALL within-bucket pairs — exact
-        within-bucket recall; output bounded by (pair_cap-1)/2 edges per
-        signature row, so O(pair_cap * N) worst case, no skew (the
-        self-join keys are small buckets by construction).
-      * buckets with cnt > pair_cap (rare; at a 128-bit band key these
-        are overwhelmingly true-dup crowds): star to the bucket min PLUS
-        a salted sub-star (min per (bucket, xxhash(conv_id) % sub_salt))
-        PLUS the salt-local consecutive-member chain (chain_edges; the
-        rep is excluded from chain membership) — linear edge count
-        (3 per member). The chain closes the salt-straddle hole: it is
-        a Hamiltonian path over the non-rep members, so an outlier
-        bucket-min (not in the chain at all) cannot disconnect the
-        rest; k interior outliers can split the chain into at most k+1
-        runs, which the star/sub-star edges then usually re-join
-        (exhaustive only for pairs within a run — documented, bounded
-        to cnt > pair_cap). No chain window task ever sees more than
-        ~cnt/chain_salt members (chain_edges docstring).
-
-    All groupBys are algebraic (min) — map-side partials absorb the
-    mega-bucket before the shuffle; the join-backs are equi-joins that
-    AQE skew-splits.
-
-    probe_giants (round 7): ONE cheap driver probe (`any bucket with
-    cnt > pair_cap?` — an isEmpty over the algebraic bucket aggregate,
-    whose map-side partials reduce it to ~one row per bucket per scan
-    partition) decides at build time whether the giant-bucket branches
-    (star + sub-star + chain) are provably empty. When they are — the
-    overwhelmingly common case at any healthy pair_cap — the returned
-    plan is the all-pairs branch ALONE: identical edge set (the skipped
-    branches only ever emit rows for cnt > pair_cap buckets), ~8 fewer
-    AQE stage-jobs of pure fixed latency per call. When a giant exists
-    the full plan is returned unchanged. Callers that must stay lazy
-    (plan inspection over unpersisted inputs) pass probe_giants=False.
     """
-    if buckets is None:
-        buckets = lsh_buckets(sigs, salt_buckets)
-    if probe_giants and buckets.where(F.col("cnt") > pair_cap).isEmpty():
-        # the cnt <= pair_cap filter STAYS in the plan: a provable no-op
-        # when the probe's snapshot holds, and the structural quadratic
-        # bound if a nondeterministic/evicted lineage recomputes a
-        # bucket past the cap at execution time (such a bucket then
-        # contributes no pairs at all rather than O(cnt^2) rows)
-        small_now = buckets.where(F.col("cnt") <= pair_cap).select(*BUCKET_KEY)
-        sm = sigs.join(small_now, BUCKET_KEY).select(*BUCKET_KEY, "conv_id")
-        return (sm.join(sm.select(*BUCKET_KEY, F.col("conv_id").alias("dst")),
-                        BUCKET_KEY)
-                .where(F.col("conv_id") > F.col("dst"))
-                .select(F.col("conv_id").alias("src"), "dst")
-                .distinct())
-    small = buckets.where(F.col("cnt") <= pair_cap).select(*BUCKET_KEY)
-    big = buckets.where(F.col("cnt") > pair_cap).select(*BUCKET_KEY, "rep")
-
-    sm = sigs.join(small, BUCKET_KEY).select(*BUCKET_KEY, "conv_id")
-    pairs = (
-        sm.join(sm.select(*BUCKET_KEY, F.col("conv_id").alias("dst")),
-                BUCKET_KEY)
-        .where(F.col("conv_id") > F.col("dst"))
-        .select(F.col("conv_id").alias("src"), "dst")
-    )
-
-    bm = (sigs.join(big, BUCKET_KEY)
-          .select(*BUCKET_KEY, "conv_id", "rep",
-                  F.pmod(F.xxhash64("conv_id"),
-                         F.lit(sub_salt)).alias("_salt")))
-    star = (bm.where(F.col("conv_id") != F.col("rep"))
-            .select(F.col("conv_id").alias("src"), F.col("rep").alias("dst")))
-    sub_reps = (bm.groupBy(*BUCKET_KEY, "_salt")
-                .agg(F.min("conv_id").alias("srep")))
-    sub_star = (bm.join(sub_reps, [*BUCKET_KEY, "_salt"])
-                .where(F.col("conv_id") != F.col("srep"))
-                .select(F.col("conv_id").alias("src"),
-                        F.col("srep").alias("dst")))
-    out = pairs.union(star).union(sub_star)
-    if chain:
-        # rep excluded: served by star edges; see chain_edges docstring
-        out = out.union(chain_edges(
-            bm.where(F.col("conv_id") != F.col("rep"))
-              .select(*BUCKET_KEY, "conv_id"),
-            BUCKET_KEY))
-    return out.distinct()
+    return bucket_pair_edges(sigs, BUCKET_KEY, pair_cap, sub_salt, chain)

@@ -8,16 +8,17 @@ Candidate generation is pigeonhole block-LSH: split the 64-bit signature
 into `num_blocks` contiguous blocks; any pair within Hamming distance
 num_blocks-1 shares at least one exact block. Blocks are emitted with a
 single explode over one scan of sigs (not a num_blocks-way union), and
-candidate edges come from operators/lsh.pair-edge logic:
+the (block_id, block_val) groups go through the same candidate-edge
+generator as the minhash bands (lsh.bucket_pair_edges):
 
   * block groups with cnt <= pair_cap get ALL within-group pairs, so the
     pigeonhole recall guarantee (every pair at Hamming <= num_blocks-1
     is verified directly) holds exactly for them;
   * giant groups (cnt > pair_cap — e.g. a crowd of identical docs whose
-    block value is shared) fall back to star + salted sub-star edges:
-    linear edge count, heuristic recall (a giant MIXED group can still
-    lose a pair whose two rep edges both fail verification; bounded to
-    cnt > pair_cap and documented here, NOT claimed as recall 1.0).
+    block value is shared) get star + salted sub-star + the salt-local
+    chain: linear edge count, recall bounded as in lsh's module doc
+    (k failing interior outliers split a group's chain into <= k+1
+    runs), NOT claimed as recall 1.0.
 
 Verification is JVM-side: bit_count(sig_a ^ sig_b) — no Python.
 
@@ -32,7 +33,7 @@ from pyspark.sql import functions as F
 
 from minhash_rs_spark.functions.udfs import with_simhash
 from minhash_rs_spark.operators.connected_components import connected_components
-from minhash_rs_spark.operators.lsh import chain_edges
+from minhash_rs_spark.operators.lsh import bucket_pair_edges
 
 BLOCK_KEY = ["block_id", "block_val"]
 
@@ -63,65 +64,11 @@ def _block_rows(sigs: DataFrame, num_blocks: int) -> DataFrame:
 def simhash_candidate_edges(sigs: DataFrame, num_blocks: int = 4,
                             pair_cap: int = 32,
                             sub_salt: int = 16,
-                            chain: bool = True,
-                            probe_giants: bool = True) -> DataFrame:
-    """Candidate edges over pigeonhole blocks: all pairs for small block
-    groups, star + salted sub-star for giant ones (see module doc).
-
-    probe_giants: same round-7 build-time probe as lsh.pair_edges —
-    when no block group exceeds pair_cap (one cheap isEmpty over the
-    algebraic group aggregate), the giant-group branches are provably
-    empty and the returned plan is the all-pairs branch alone
-    (identical edge set, ~8 fewer fixed-latency stage-jobs)."""
-    blocks = _block_rows(sigs, num_blocks)
-    groups = (blocks.groupBy(*BLOCK_KEY)
-              .agg(F.min("conv_id").alias("rep"),
-                   F.count(F.lit(1)).alias("cnt"))
-              .where(F.col("cnt") > 1))
-
-    if probe_giants and groups.where(F.col("cnt") > pair_cap).isEmpty():
-        # cnt <= pair_cap stays in the plan (see lsh.pair_edges): a
-        # no-op when the probe held, the quadratic bound if the lineage
-        # recomputes a group past the cap
-        small_now = groups.where(F.col("cnt") <= pair_cap).select(*BLOCK_KEY)
-        sm = blocks.join(small_now, BLOCK_KEY)
-        return (sm.join(sm.select(*BLOCK_KEY, F.col("conv_id").alias("dst")),
-                        BLOCK_KEY)
-                .where(F.col("conv_id") > F.col("dst"))
-                .select(F.col("conv_id").alias("src"), "dst")
-                .distinct())
-
-    small = groups.where(F.col("cnt") <= pair_cap).select(*BLOCK_KEY)
-    big = groups.where(F.col("cnt") > pair_cap).select(*BLOCK_KEY, "rep")
-
-    sm = blocks.join(small, BLOCK_KEY)
-    pairs = (sm.join(sm.select(*BLOCK_KEY, F.col("conv_id").alias("dst")),
-                     BLOCK_KEY)
-             .where(F.col("conv_id") > F.col("dst"))
-             .select(F.col("conv_id").alias("src"), "dst"))
-
-    bm = (blocks.join(big, BLOCK_KEY)
-          .select(*BLOCK_KEY, "conv_id", "rep",
-                  F.pmod(F.xxhash64("conv_id"),
-                         F.lit(sub_salt)).alias("_salt")))
-    star = (bm.where(F.col("conv_id") != F.col("rep"))
-            .select(F.col("conv_id").alias("src"), F.col("rep").alias("dst")))
-    sub_reps = (bm.groupBy(*BLOCK_KEY, "_salt")
-                .agg(F.min("conv_id").alias("srep")))
-    sub_star = (bm.join(sub_reps, [*BLOCK_KEY, "_salt"])
-                .where(F.col("conv_id") != F.col("srep"))
-                .select(F.col("conv_id").alias("src"),
-                        F.col("srep").alias("dst")))
-    out = pairs.union(star).union(sub_star)
-    if chain:
-        # salt-local consecutive-member chain (lsh.chain_edges, rep
-        # excluded): closes the giant-block salt-straddle recall hole
-        # under Hamming verification without any whole-block window task
-        out = out.union(chain_edges(
-            bm.where(F.col("conv_id") != F.col("rep"))
-              .select(*BLOCK_KEY, "conv_id"),
-            BLOCK_KEY))
-    return out.distinct()
+                            chain: bool = True) -> DataFrame:
+    """Candidate edges over pigeonhole blocks: lsh.bucket_pair_edges
+    keyed by (block_id, block_val) (see module doc)."""
+    return bucket_pair_edges(_block_rows(sigs, num_blocks), BLOCK_KEY,
+                             pair_cap, sub_salt, chain)
 
 
 def simhash_verified_edges(edges: DataFrame, sigs: DataFrame,

@@ -144,6 +144,11 @@ def _arrow_topk(embeddings: DataFrame, k: int, query_mod: int,
     Q = _list_matrix(q_tbl.column("qv"), pa)
     order = np.argsort(qids)
     qids, Q = qids[order], np.ascontiguousarray(Q[order])
+    if n_bits is not None and n_bits > Q.shape[1]:
+        raise ValueError(
+            f"n_bits={n_bits} exceeds the embedding dimension "
+            f"{Q.shape[1]}: the sign bucket reads the first n_bits "
+            "components")
     qn = _fold_norms(Q)
     qb = _np_sign_bucket(Q, n_bits) if n_bits is not None else None
     nq = len(qids)
@@ -243,7 +248,10 @@ def brute_force_topk(embeddings: DataFrame, k: int = 5,
     Round 7: executed by _arrow_topk (single-scan numpy batch kernel,
     bitwise-identical floats) — the old crossJoin + per-pair JVM
     higher-order-function plan spent ~107 s at the driver's sf1.0
-    (20k x 400 pairs through interpreted aggregate/zip_with)."""
+    (20k x 400 pairs through interpreted aggregate/zip_with).
+
+    NULL embedding rows or elements fail loudly (ValueError) rather
+    than rank; filter them before calling."""
     return _arrow_topk(embeddings, k, query_mod, id_col, vec_col)
 
 
@@ -272,7 +280,11 @@ def lsh_topk(embeddings: DataFrame, k: int = 5, query_mod: int = 50,
     Round 7: same _arrow_topk kernel as brute_force_topk with the
     bucket-equality mask applied in-batch (_np_sign_bucket is the
     numpy twin of _sign_bucket; identical >= 0 semantics incl. -0.0
-    and NaN) — replaces the bucket equi-join + per-pair JVM cosine."""
+    and NaN) — replaces the bucket equi-join + per-pair JVM cosine.
+
+    NULL embedding rows or elements fail loudly (ValueError) rather
+    than rank; filter them before calling. n_bits larger than the
+    embedding dimension is a ValueError naming both values."""
     return _arrow_topk(embeddings, k, query_mod, id_col, vec_col,
                        n_bits=n_bits)
 

@@ -193,12 +193,10 @@ def run_minhash(spark: SparkSession, turns: DataFrame,
     # Verified path: within-bucket pair edges (star edges anchored at an
     # outlier bucket-min would let verification disconnect true pairs).
     if cfg.jaccard_threshold is None:
-        edges = ckpt.stage("edges", lambda: star_edges(
-            sigs, salt_buckets=cfg.salt_buckets))
+        edges = ckpt.stage("edges", lambda: star_edges(sigs))
     else:
         edges = ckpt.stage("edges", lambda: pair_edges(
-            sigs, salt_buckets=cfg.salt_buckets,
-            pair_cap=cfg.verify_pair_cap))
+            sigs, pair_cap=cfg.verify_pair_cap))
 
     if cfg.jaccard_threshold is not None and shingles is not None:
         # max_shingles_per_doc bounds ONLY the exact-verification sets —

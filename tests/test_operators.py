@@ -351,6 +351,18 @@ def test_similarity_topk_and_lsh_recall(spark):
     assert (0, 100) in lsh
 
 
+
+def test_lsh_topk_rejects_n_bits_above_dim(spark):
+    """n_bits larger than the embedding dimension is a ValueError at
+    call time naming both values, not a bare IndexError."""
+    from minhash_rs_spark.operators.similarity import lsh_topk
+
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0, -1.0]) for i in range(4)],
+        "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match=r"n_bits=4 .*dimension 3"):
+        lsh_topk(emb, k=2, query_mod=2, n_bits=4)
+
 # ---- multimodal plumbing ----
 
 def test_multimodal_stub(spark):
@@ -473,6 +485,69 @@ def test_simhash_pair_edges_outlier_block_min(spark):
     assert ("b2", "b1") in kept
     assert all("a0" not in e for e in kept)
 
+
+
+def _crowd_band_sigs(spark):
+    """Band rows: d000-d039 share one bucket (a crowd above the default
+    pair_cap of 32); the rest fall into buckets of three."""
+    return spark.range(200).select(
+        F.format_string("d%03d", "id").alias("conv_id"),
+        F.lit(0).alias("band_id"),
+        F.when(F.col("id") < 40, F.lit(-1)).otherwise(F.col("id") / 3)
+         .cast("long").alias("sig_hi"),
+        F.lit(7).cast("long").alias("sig_lo"))
+
+
+def _crowd_simhash_sigs(spark):
+    """Same shape as SimHash signatures: d000-d039 share simhash 0 (every
+    block group above pair_cap); the rest repeat one 16-bit value in all
+    four blocks, shared by groups of three."""
+    v = (F.col("id") / 3).cast("long")
+    rep4 = (v + F.shiftleft(v, 16) + F.shiftleft(v, 32)
+            + F.shiftleft(v, 48))
+    return spark.range(200).select(
+        F.format_string("d%03d", "id").alias("conv_id"),
+        F.when(F.col("id") < 40, F.lit(0).cast("long"))
+         .otherwise(rep4).alias("simhash"))
+
+
+@pytest.mark.parametrize("generator", ["pair_edges",
+                                       "simhash_candidate_edges"])
+def test_candidate_edges_survive_unpersisted_sigs(spark, generator):
+    """Failure injection: the sigs are unpersisted after the edge plan
+    was built (bucket aggregate pinned, giant-bucket check taken) but
+    before the action runs. The recomputed lineage must give the same
+    edge set as a run that keeps the sigs persisted, and the planted
+    crowd must still be one component."""
+    from minhash_rs_spark.operators.connected_components import (
+        connected_components,
+    )
+    from minhash_rs_spark.operators.lsh import pair_edges
+    from minhash_rs_spark.operators.simhash import simhash_candidate_edges
+
+    build, make_sigs = {
+        "pair_edges": (pair_edges, _crowd_band_sigs),
+        "simhash_candidate_edges": (simhash_candidate_edges,
+                                    _crowd_simhash_sigs),
+    }[generator]
+    sigs = make_sigs(spark).persist()
+    sigs.count()
+    expected = {tuple(r) for r in build(sigs).collect()}
+
+    edges = build(sigs)
+    sigs.unpersist(blocking=True)
+    assert not sigs.is_cached
+    got = {tuple(r) for r in edges.collect()}
+    assert got == expected
+
+    crowd = {f"d{i:03d}" for i in range(40)}
+    edges_df = spark.createDataFrame(sorted(got), "src string, dst string")
+    cc = {r["conv_id"]: r["cc_id"]
+          for r in connected_components(edges_df).collect()}
+    assert crowd <= cc.keys()
+    assert len({cc[c] for c in crowd}) == 1
+    # the small buckets stay apart from the crowd
+    assert cc["d040"] not in {cc[c] for c in crowd}
 
 def test_cosine_near_dup_lsh_recall_and_no_cartesian(spark):
     """The scale path for embedding near-dup pairs: planted high-cosine
@@ -1417,6 +1492,35 @@ def test_compact_history_equals_union(spark, tmp_path):
     # same-list re-run stays a clean resume
     assert compact_history(spark, cfg, tokens[:3], "hist3") == "hist3"
 
+
+
+def test_compact_history_records_inputs_before_shingles_check(spark,
+                                                              tmp_path):
+    """ADVICE medium: a verified-config compaction that raises on a
+    missing shingles table AFTER its sigs committed must still record
+    its inputs, so a re-run under the same out_token with a different
+    token list trips the guard instead of resuming the stale sigs."""
+    import shutil
+
+    from minhash_rs_spark.operators.incremental import compact_history
+    from minhash_rs_spark.pipeline import config_fingerprint, run_minhash
+
+    cfg = MinHashConfig(checkpoint_dir=str(tmp_path / "ck"),
+                        jaccard_threshold=0.5, annotate_only=False)
+    for g, tok in enumerate(("t0", "t1", "t2")):
+        turns = spark.createDataFrame(
+            _one_turn_rows([(f"d{g}", " ".join(f"word{g}x{i}"
+                                               for i in range(12)))]),
+            ["conv_id", "turn_idx", "text"])
+        run_minhash(spark, turns, cfg, input_token=tok, upto="sigs")
+    shutil.rmtree(str(tmp_path / "ck" / config_fingerprint(cfg, "t1")
+                      / "shingles"))
+
+    with pytest.raises(ValueError, match="no committed shingles"):
+        compact_history(spark, cfg, ["t0", "t1"], "hist")
+    # t0 and t2 both have shingles: only the guard can raise here
+    with pytest.raises(ValueError, match="already holds a compaction"):
+        compact_history(spark, cfg, ["t0", "t2"], "hist")
 
 def test_incremental_old_cap_counts_distinct_history_ids(spark):
     """ADVICE r6 #1: duplicate (bucket, conv_id) rows in history (the

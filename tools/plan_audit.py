@@ -114,19 +114,35 @@ def main():
                    and "Join" not in p))
 
     # 7. verified-path candidate edges: algebraic aggs, no cartesian.
-    # probe_giants=False: audit the FULL giant-bucket plan (the shape
-    # that runs when a bucket exceeds pair_cap) and keep the audit
-    # lazy/data-independent, per pair_edges' plan-inspection guidance
-    from minhash_rs_spark.operators.lsh import pair_edges
+    # The bucket aggregate is what pair_edges pins, so its map-side
+    # partial is audited on lsh_buckets' plan; pair_edges itself runs
+    # over sigs with a planted bucket above pair_cap so the audited plan
+    # carries every giant-bucket branch (star, sub-star, chain), and
+    # must read the bucket stats from the pin instead of re-aggregating
+    from minhash_rs_spark.operators.lsh import lsh_buckets, pair_edges
 
-    p = plan_of(pair_edges(sigs, probe_giants=False))
-    sections.append(("pair_edges (verified-path candidates)", p,
+    p = plan_of(lsh_buckets(sigs))
+    sections.append(("lsh_buckets (pinned by pair_edges)", p,
                      ["HashAggregate"]))
-    checks.append(("pair_edges no cartesian product",
-                   "CartesianProduct" not in p
-                   and "BroadcastNestedLoopJoin" not in p))
     checks.append(("pair_edges bucket agg partial",
                    p.count("HashAggregate") >= 2))
+    pair_cap = 8
+    planted = spark.range(pair_cap + 1).select(
+        F.format_string("planted%02d", "id").alias("conv_id"),
+        F.lit(0).alias("band_id"), F.lit(7).alias("sig_hi"),
+        F.lit(7).alias("sig_lo"))
+    giant_sigs = sigs.unionByName(planted.select(
+        *[F.col(f.name).cast(f.dataType) for f in sigs.schema.fields]))
+    p = plan_of(pair_edges(giant_sigs, pair_cap=pair_cap))
+    sections.append(("pair_edges (verified-path candidates, giant bucket)",
+                     p, ["HashAggregate", "ExistingRDD"]))
+    checks.append(("pair_edges no cartesian product (giant plan: chain "
+                   "planned)", "_csalt" in p
+                   and "CartesianProduct" not in p
+                   and "BroadcastNestedLoopJoin" not in p))
+    checks.append(("pair_edges reads bucket stats from the pinned scan "
+                   "(ExistingRDD, no count aggregate re-planned)",
+                   "ExistingRDD" in p and "count(1)" not in p))
 
     # 8. embedding near-dup LSH path: bucketed, never cartesian
     from minhash_rs_spark.operators.similarity import cosine_near_dup_pairs

@@ -43,8 +43,7 @@ docs = assemble_token_docs(turns, cfg.conv_col, cfg.order_col,
                            cfg.text_col, mode=cfg.tokenizer).persist()
 shingles = shingle_sets_from_tokens(docs, cfg).persist()
 sigs = band_signature_rows_from_tokens(docs, cfg)
-edges = pair_edges(sigs, salt_buckets=cfg.salt_buckets,
-                   pair_cap=cfg.verify_pair_cap).persist()
+edges = pair_edges(sigs, pair_cap=cfg.verify_pair_cap).persist()
 
 t = cfg.jaccard_threshold
 sizes = shingles.select("conv_id", F.size("shingles").alias("n_sh"))
