@@ -114,26 +114,20 @@ def mulhi64(x: np.ndarray, y: np.ndarray) -> np.ndarray:
 
 
 @_wrapping
-def perm_hash_top64(a_hi: np.uint64, a_lo: np.uint64,
-                    h_hi: np.ndarray, h_lo: np.ndarray) -> np.ndarray:
-    """Top 64 bits of (a * h) mod 2^128 for one permutation `a` over a
-    vector of u128 shingle hashes h (ref math: src/main.rs:674-677).
-
-    top64 = mulhi64(a_lo, h_lo) + a_lo*h_hi + a_hi*h_lo  (wrapping u64)
-    """
-    return mulhi64(np.broadcast_to(a_lo, h_lo.shape), h_lo) + a_lo * h_hi + a_hi * h_lo
-
-
-@_wrapping
 def minhash_block(a_hi: np.ndarray, a_lo: np.ndarray,
                   h_hi: np.ndarray, h_lo: np.ndarray,
                   seg_starts: np.ndarray, out: np.ndarray) -> None:
     """All permutations over one cache-resident shingle block.
 
-    out: (n_docs_in_block, num_perms) u64, written in place.
-    Identical math to perm_hash_top64/mulhi64, but with preallocated
-    temporaries reused across the permutation loop — the inner arrays
-    (block-sized, ~0.5MB) stay in cache for all ~112 perms.
+    out: (n_docs_in_block, num_perms) u64, written in place. Per
+    permutation `a`, the top 64 bits of (a * h) mod 2^128 over the u128
+    shingle hashes h (ref math: src/main.rs:674-677):
+
+      top64 = mulhi64(a_lo, h_lo) + a_lo*h_hi + a_hi*h_lo  (wrapping u64)
+
+    with mulhi64's limb math inlined on preallocated temporaries reused
+    across the permutation loop — the inner arrays (block-sized, ~0.5MB)
+    stay in cache for all ~112 perms.
     """
     n = len(h_lo)
     x0 = h_lo & _LO32

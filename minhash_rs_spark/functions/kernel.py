@@ -2,10 +2,11 @@
 -> band signatures, numpy-vectorized over batches of documents.
 
 This is the single compute-dense component of the engine. It runs inside
-Arrow-batched pandas UDFs (see functions/udfs.py) — no per-row Python in
-the hot path beyond tokenization itself, and all hashing/permutation
-math is vectorized across the concatenated shingles of a whole batch
-(np.minimum.reduceat over document boundaries).
+the mapInArrow UDFs of functions/udfs.py — no per-row Python in the hot
+path beyond tokenization itself, and all shingling/hashing/permutation
+math is vectorized across the flat concatenated tokens of a whole batch
+(np.minimum.reduceat over document boundaries). `doc_shingles` is the
+per-doc scalar reference the batch path is tested against.
 
 Semantics mirror the reference phase-2 `process_path`
 (/root/reference/src/main.rs:489-679); divergences are deliberate and
@@ -138,6 +139,16 @@ def doc_shingles(text: str, ngram_size: int, mode: str = "words",
     return np.unique(H.rolling_poly_hashes(toks, ngram_size))
 
 
+def flatten_docs(arrays: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
+    """Per-doc u64 arrays -> (flat values, int64 doc start offsets), the
+    Arrow ListArray layout every batch kernel consumes."""
+    lens = np.fromiter((len(a) for a in arrays), dtype=np.int64,
+                       count=len(arrays))
+    starts = np.zeros(len(arrays), dtype=np.int64)
+    np.cumsum(lens[:-1], out=starts[1:])
+    return np.concatenate(arrays), starts
+
+
 @dataclass
 class SignatureKernel:
     """Precomputed permutation state + batch signature computation."""
@@ -155,18 +166,20 @@ class SignatureKernel:
         self.a_hi, self.a_lo = H.init_permutations(perm_seeds)
         self.num_perms = self.num_bands * self.band_size
 
-    # ---- shingling ----
+    # ---- tokenization ----
 
     def shingles_batch(self, texts) -> list[np.ndarray | None]:
-        """Per-doc shingle sets; a doc whose tokenization raises yields
-        None (P7 failure guard, ref catch_unwind src/main.rs:522-526) —
-        callers drop it and it survives downstream as a singleton."""
+        """Per-doc token-hash arrays — the input of the flat shingler
+        (hashing.rolling_poly_from_flat). A doc whose tokenization raises
+        yields None (P7 failure guard, ref catch_unwind
+        src/main.rs:522-526) — callers drop it and it survives
+        downstream as a singleton."""
         cache: dict = {}
         out: list[np.ndarray | None] = []
         for t in texts:
             try:
-                out.append(doc_shingles(t if t is not None else "",
-                                        self.ngram_size, self.tokenizer, cache))
+                out.append(tokenize(clean_text(t if t is not None else ""),
+                                    self.tokenizer, cache))
             except (ValueError, NotImplementedError):
                 raise  # config errors must fail the job, not skip docs
             except Exception:
@@ -175,32 +188,20 @@ class SignatureKernel:
 
     # ---- minhash ----
 
-    def minhash_from_shingles(self, shingle_arrays: list[np.ndarray]) -> np.ndarray:
-        """(num_docs, num_perms) u64 minhash matrix.
+    def minhash_from_flat(self, flat: np.ndarray, starts: np.ndarray) -> np.ndarray:
+        """(num_docs, num_perms) u64 minhash matrix over pre-flattened
+        shingles + doc start offsets (the zero-copy Arrow ListArray
+        layout; see udfs.band_signature_rows).
 
-        Flattens docs' shingles and runs each permutation's multiply-shift
-        + per-doc min (np.minimum.reduceat) — the vectorized analog of ref
+        Runs each permutation's multiply-shift + per-doc min
+        (np.minimum.reduceat) — the vectorized analog of ref
         src/main.rs:664-677. Work is blocked into cache-resident chunks of
-        docs (~64k shingles) with the permutation loop INSIDE the block:
+        docs (~16k shingles) with the permutation loop INSIDE the block:
         the limb arrays stay hot in L2/L3 across all 112 permutations
         instead of streaming ~10 u64 temporaries per perm through DRAM —
         executors run ~32 such kernels concurrently, so the unblocked
         version saturates memory bandwidth (measured ~10x slowdown).
         """
-        ndocs = len(shingle_arrays)
-        if ndocs == 0:
-            return np.full((0, self.num_perms), H.MAX_HASH, dtype=U64)
-        lens = np.array([len(a) for a in shingle_arrays], dtype=np.int64)
-        # every doc has >=1 shingle (short-doc fallback in rolling_poly_hashes)
-        assert (lens > 0).all(), "doc with zero shingles — fallback violated"
-        flat = np.concatenate(shingle_arrays) if ndocs > 1 else shingle_arrays[0]
-        starts = np.zeros(ndocs, dtype=np.int64)
-        np.cumsum(lens[:-1], out=starts[1:])
-        return self.minhash_from_flat(flat, starts)
-
-    def minhash_from_flat(self, flat: np.ndarray, starts: np.ndarray) -> np.ndarray:
-        """Same, over pre-flattened shingles + doc start offsets (the
-        zero-copy Arrow ListArray layout; see udfs.band_signature_rows)."""
         ndocs = len(starts)
         hv = np.full((ndocs, self.num_perms), H.MAX_HASH, dtype=U64)
         if ndocs == 0:
@@ -228,12 +229,6 @@ class SignatureKernel:
             d0 = d1
         return hv
 
-    def signatures_from_shingles(self, shingle_arrays: list[np.ndarray]
-                                 ) -> tuple[np.ndarray, np.ndarray]:
-        """Per-doc per-band 128-bit LSH keys: (hi, lo) each (num_docs, num_bands)."""
-        hv = self.minhash_from_shingles(shingle_arrays)
-        return H.band_signatures(hv, self.num_bands, self.band_size)
-
     def band_sigs_from_flat(self, flat: np.ndarray, starts: np.ndarray
                             ) -> tuple[np.ndarray, np.ndarray]:
         """Band signatures straight from the Arrow ListArray layout."""
@@ -249,7 +244,9 @@ class SignatureKernel:
                  for t in texts), dtype=U64, count=len(texts))
             hv = np.repeat(doc_h[:, None], self.num_perms, axis=1)
             return H.band_signatures(hv, self.num_bands, self.band_size)
-        return self.signatures_from_shingles(self.shingles_batch(texts))
+        flat, starts = flatten_docs(self.shingles_batch(texts))
+        return self.band_sigs_from_flat(
+            *H.rolling_poly_from_flat(flat, starts, self.ngram_size))
 
 
 def jaccard_u64(a: np.ndarray, b: np.ndarray) -> float:

@@ -1,7 +1,7 @@
 """Arrow-batched Spark UDFs wrapping the numpy kernel.
 
-Exactly the UDF surface SURVEY.md §2.7 calls for — vectorized
-mapInPandas / pandas_udf only, no per-row Python:
+Exactly the UDF surface SURVEY.md §2.7 calls for — every UDF is one
+mapInArrow over flat buffers, no per-row Python beyond tokenization:
 
   shingle_sets(...)        text -> sorted-unique u64 shingle ids (P1-P3)
   band_signature_rows(...) shingles -> exploded (band_id, sig_hi, sig_lo)
@@ -12,6 +12,11 @@ mapInPandas / pandas_udf only, no per-row Python:
   with_simhash(df, col)    64-bit SimHash of a shingle-array column
                            (north rule) — batch unpackbits + reduceat
 
+Every shingle and signature UDF reads and writes the same layout: one
+flat u64 value buffer + per-doc start offsets (the Arrow ListArray
+layout). `_shingle_batch` and `_sig_batch` build the two output batch
+shapes from it.
+
 u64 <-> int64: Spark LongType is signed; we reinterpret bits with
 ndarray.view / .astype copies — values round-trip exactly.
 """
@@ -21,14 +26,15 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from minhash_rs_spark.config import MinHashConfig
-from minhash_rs_spark.functions.kernel import SignatureKernel
+from minhash_rs_spark.functions import hashing as H
+from minhash_rs_spark.functions.kernel import SignatureKernel, flatten_docs
 
 SHINGLES_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType(), False),
@@ -51,6 +57,54 @@ def _kernel(cfg: MinHashConfig) -> SignatureKernel:
         hash_seed=cfg.hash_seed, exact_override=cfg.exact_override)
 
 
+def _list_flat(lst):
+    """(values u64 view, starts int64) from an Arrow ListArray column."""
+    if isinstance(lst, pa.ChunkedArray):  # pragma: no cover
+        lst = lst.combine_chunks()
+    offsets = lst.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    flat = lst.values.to_numpy(zero_copy_only=False).view(np.uint64)
+    # account for a possible non-zero list-view offset
+    base = offsets[0]
+    return flat[base:offsets[-1]], offsets[:-1] - base
+
+
+def _shingle_batch(conv, flat, starts, ngram: int) -> "pa.RecordBatch":
+    """(conv_id, shingles, n_shingles) batch from a flat token-hash
+    buffer: batch rolling shingles, then a lexsort dedup per doc — the
+    sorted-unique sets exact-Jaccard verification needs. The list column
+    is assembled from one flat buffer + offsets; no per-doc Python
+    objects cross the Arrow boundary.
+
+    max_shingles_per_doc is NOT applied here — MinHash signatures are
+    cap-invariant on every tokenizer path; the cap bounds only the
+    exact-verification sets and is applied once, in pipeline.run_minhash
+    (a capped-set minimum would bias the MinHash estimator and make the
+    clustering depend on which tokenizer path produced the signature)."""
+    u_flat, u_starts = H.unique_per_doc(
+        *H.rolling_poly_from_flat(flat, starts, ngram))
+    offsets = np.append(u_starts, len(u_flat)).astype(np.int32)
+    return pa.RecordBatch.from_arrays(
+        [conv,
+         pa.ListArray.from_arrays(pa.array(offsets),
+                                  pa.array(u_flat.view(np.int64))),
+         pa.array(np.diff(offsets))],
+        names=SHINGLES_SCHEMA.names)
+
+
+def _sig_batch(conv, hi: np.ndarray, lo: np.ndarray) -> "pa.RecordBatch":
+    """One row per (doc, band) from (num_docs, num_bands) key halves: the
+    num_bands-per-doc explosion happens with np.repeat/tile inside the
+    batch — Spark never materializes an intermediate array column.
+    (ref phase 2 layout: src/main.rs:411-429)"""
+    n, nb = hi.shape
+    return pa.RecordBatch.from_arrays(
+        [conv.take(pa.array(np.repeat(np.arange(n), nb))),
+         pa.array(np.tile(np.arange(nb, dtype=np.int32), n)),
+         pa.array(hi.reshape(-1).view(np.int64)),
+         pa.array(lo.reshape(-1).view(np.int64))],
+        names=SIG_SCHEMA.names)
+
+
 def shingle_sets(docs: DataFrame, cfg: MinHashConfig,
                  text_col: str = "doc_text") -> DataFrame:
     """(conv_id, doc_text) -> (conv_id, shingles array<long>, n_shingles).
@@ -59,50 +113,28 @@ def shingle_sets(docs: DataFrame, cfg: MinHashConfig,
     the exact-Jaccard verification stage (the reference re-tokenizes in
     its true-jacc pass, src/main.rs:563-576 — we don't).
 
-    mapInArrow: the output list column is assembled from one flat numpy
-    buffer + offsets (pa.ListArray.from_arrays) — no per-doc Python
-    objects cross the Arrow boundary (only tokenization itself touches
-    Python strings, unavoidably).
+    Only tokenization touches Python strings; the per-doc token arrays
+    are concatenated once per batch and shingled by _shingle_batch.
     """
-    import pyarrow as pa
-
-    kernel_cfg = cfg
 
     def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        kernel = _kernel(kernel_cfg)
+        kernel = _kernel(cfg)
         for rb in batches:
             if rb.num_rows == 0:
                 continue
             conv = rb.column(0)
-            arrs = kernel.shingles_batch(rb.column(1).to_pylist())
+            toks = kernel.shingles_batch(rb.column(1).to_pylist())
             # P7 tokenization-failure guard (ref catch_unwind,
             # src/main.rs:522-526): a doc whose tokenization raised is
             # dropped here -> no signatures -> it survives as a singleton,
             # matching the reference's skip-and-continue
-            failed = [i for i, a in enumerate(arrs) if a is None]
-            if failed:
-                keep = np.ones(len(arrs), dtype=bool)
-                keep[failed] = False
+            keep = [t is not None for t in toks]
+            if not all(keep):
                 conv = conv.filter(pa.array(keep))
-                arrs = [a for a in arrs if a is not None]
-                if not arrs:
+                toks = [t for t in toks if t is not None]
+                if not toks:
                     continue
-            # NOTE: max_shingles_per_doc is NOT applied here — MinHash
-            # signatures are cap-invariant on every tokenizer path; the
-            # cap bounds only the exact-verification sets and is applied
-            # once, in pipeline.run_minhash (a capped-set minimum would
-            # bias the MinHash estimator and make the clustering depend
-            # on which tokenizer path produced the signature)
-            lens = np.fromiter((len(a) for a in arrs), dtype=np.int32,
-                               count=len(arrs))
-            offsets = np.zeros(len(arrs) + 1, dtype=np.int32)
-            np.cumsum(lens, out=offsets[1:])
-            flat = np.concatenate(arrs) if len(arrs) > 1 else arrs[0]
-            shingle_col = pa.ListArray.from_arrays(
-                pa.array(offsets), pa.array(flat.view(np.int64)))
-            yield pa.RecordBatch.from_arrays(
-                [conv, shingle_col, pa.array(lens)],
-                names=["conv_id", "shingles", "n_shingles"])
+            yield _shingle_batch(conv, *flatten_docs(toks), cfg.ngram_size)
 
     return docs.select("conv_id", text_col).mapInArrow(fn, SHINGLES_SCHEMA)
 
@@ -110,54 +142,20 @@ def shingle_sets(docs: DataFrame, cfg: MinHashConfig,
 def band_signature_rows(shingles_df: DataFrame, cfg: MinHashConfig) -> DataFrame:
     """(conv_id, shingles) -> one row per (doc, band): the LSH keys.
 
-    mapInArrow both ways: the shingle list column's flat value buffer +
-    offsets feed the blocked minhash kernel directly (zero copy, zero
-    per-doc Python), and the num_bands-per-doc explosion happens with
-    np.repeat/take inside the batch — Spark never materializes an
-    intermediate array column. (ref phase 2 layout: src/main.rs:411-429)
+    The shingle list column's flat value buffer + offsets feed the
+    blocked minhash kernel directly (zero copy, zero per-doc Python).
     """
-    import pyarrow as pa
-
-    kernel_cfg = cfg
-    nb = cfg.num_bands
 
     def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        kernel = _kernel(kernel_cfg)
-        band_ids = np.arange(nb, dtype=np.int32)
+        kernel = _kernel(cfg)
         for rb in batches:
-            n = rb.num_rows
-            if n == 0:
+            if rb.num_rows == 0:
                 continue
-            conv = rb.column(0)
-            lst = rb.column(1)
-            if isinstance(lst, pa.ChunkedArray):  # pragma: no cover
-                lst = lst.combine_chunks()
-            offsets = lst.offsets.to_numpy(zero_copy_only=False)
-            flat = lst.values.to_numpy(zero_copy_only=False).view(np.uint64)
-            # account for a possible non-zero list-view offset
-            starts = offsets[:-1].astype(np.int64)
-            base = starts[0]
-            hi, lo = kernel.band_sigs_from_flat(flat[base:offsets[-1]],
-                                                starts - base)
-            rep_idx = pa.array(np.repeat(np.arange(n), nb))
-            yield pa.RecordBatch.from_arrays(
-                [conv.take(rep_idx),
-                 pa.array(np.tile(band_ids, n)),
-                 pa.array(hi.reshape(-1).view(np.int64)),
-                 pa.array(lo.reshape(-1).view(np.int64))],
-                names=["conv_id", "band_id", "sig_hi", "sig_lo"])
+            flat, starts = _list_flat(rb.column(1))
+            yield _sig_batch(rb.column(0),
+                             *kernel.band_sigs_from_flat(flat, starts))
 
     return shingles_df.select("conv_id", "shingles").mapInArrow(fn, SIG_SCHEMA)
-
-
-def _list_flat(lst, pa):
-    """(values u64 view, starts int64) from an Arrow ListArray column."""
-    if isinstance(lst, pa.ChunkedArray):  # pragma: no cover
-        lst = lst.combine_chunks()
-    offsets = lst.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-    flat = lst.values.to_numpy(zero_copy_only=False).view(np.uint64)
-    base = offsets[0]
-    return flat[base:offsets[-1]], offsets[:-1] - base
 
 
 def band_signature_rows_from_tokens(token_docs: DataFrame,
@@ -169,32 +167,15 @@ def band_signature_rows_from_tokens(token_docs: DataFrame,
     batch-vectorized rolling shingles (hashing.rolling_poly_from_flat)
     + blocked minhash. No uniqueness pass: MinHash is multiset-invariant.
     """
-    import pyarrow as pa
-
-    kernel_cfg = cfg
-    nb = cfg.num_bands
-    ngram = cfg.ngram_size
 
     def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        from minhash_rs_spark.functions import hashing as H
-
-        kernel = _kernel(kernel_cfg)
-        band_ids = np.arange(nb, dtype=np.int32)
+        kernel = _kernel(cfg)
         for rb in batches:
-            n = rb.num_rows
-            if n == 0:
+            if rb.num_rows == 0:
                 continue
-            conv = rb.column(0)
-            flat, starts = _list_flat(rb.column(1), pa)
-            sh_flat, sh_starts = H.rolling_poly_from_flat(flat, starts, ngram)
-            hi, lo = kernel.band_sigs_from_flat(sh_flat, sh_starts)
-            rep_idx = pa.array(np.repeat(np.arange(n), nb))
-            yield pa.RecordBatch.from_arrays(
-                [conv.take(rep_idx),
-                 pa.array(np.tile(band_ids, n)),
-                 pa.array(hi.reshape(-1).view(np.int64)),
-                 pa.array(lo.reshape(-1).view(np.int64))],
-                names=["conv_id", "band_id", "sig_hi", "sig_lo"])
+            flat, starts = _list_flat(rb.column(1))
+            yield _sig_batch(rb.column(0), *kernel.band_sigs_from_flat(
+                *H.rolling_poly_from_flat(flat, starts, cfg.ngram_size)))
 
     return (token_docs.select("conv_id", "token_hashes")
             .mapInArrow(fn, SIG_SCHEMA))
@@ -204,35 +185,14 @@ def shingle_sets_from_tokens(token_docs: DataFrame,
                              cfg: MinHashConfig) -> DataFrame:
     """(conv_id, token_hashes) -> (conv_id, shingles, n_shingles) with
     sorted-unique shingle sets (for exact-Jaccard verification) —
-    batch-vectorized (lexsort dedup), no per-doc Python.
-
-    max_shingles_per_doc is applied downstream (pipeline.run_minhash) on
-    the verification consumer only, never here — see shingle_sets."""
-    import pyarrow as pa
-
-    ngram = cfg.ngram_size
+    _shingle_batch straight over the JVM token buffer."""
 
     def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        from minhash_rs_spark.functions import hashing as H
-
         for rb in batches:
-            n = rb.num_rows
-            if n == 0:
+            if rb.num_rows == 0:
                 continue
-            conv = rb.column(0)
-            flat, starts = _list_flat(rb.column(1), pa)
-            sh_flat, sh_starts = H.rolling_poly_from_flat(flat, starts, ngram)
-            u_flat, u_starts = H.unique_per_doc(sh_flat, sh_starts)
-            lens = np.empty(n, dtype=np.int64)
-            lens[:-1] = u_starts[1:] - u_starts[:-1]
-            lens[-1] = len(u_flat) - u_starts[-1]
-            offsets = np.zeros(n + 1, dtype=np.int32)
-            np.cumsum(lens, out=offsets[1:])
-            shingle_col = pa.ListArray.from_arrays(
-                pa.array(offsets), pa.array(u_flat.view(np.int64)))
-            yield pa.RecordBatch.from_arrays(
-                [conv, shingle_col, pa.array(lens.astype(np.int32))],
-                names=["conv_id", "shingles", "n_shingles"])
+            yield _shingle_batch(rb.column(0), *_list_flat(rb.column(1)),
+                                 cfg.ngram_size)
 
     return (token_docs.select("conv_id", "token_hashes")
             .mapInArrow(fn, SHINGLES_SCHEMA))
@@ -242,25 +202,16 @@ def band_signature_rows_exact(docs: DataFrame, cfg: MinHashConfig,
                               text_col: str = "doc_text") -> DataFrame:
     """exact_override mode: signatures straight from text
     (ref: src/main.rs:522-533) — skips shingling entirely."""
-    kernel_cfg = cfg
-    nb = cfg.num_bands
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        kernel = _kernel(kernel_cfg)
-        band_ids = np.arange(nb, dtype=np.int32)
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        kernel = _kernel(cfg)
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            hi, lo = kernel.signatures_for_texts(pdf[text_col].tolist())
-            yield pd.DataFrame({
-                "conv_id": np.repeat(pdf["conv_id"].values, nb),
-                "band_id": np.tile(band_ids, n),
-                "sig_hi": hi.reshape(-1).view(np.int64),
-                "sig_lo": lo.reshape(-1).view(np.int64),
-            })
+            yield _sig_batch(rb.column(0), *kernel.signatures_for_texts(
+                rb.column(1).to_pylist()))
 
-    return docs.select("conv_id", text_col).mapInPandas(fn, SIG_SCHEMA)
+    return docs.select("conv_id", text_col).mapInArrow(fn, SIG_SCHEMA)
 
 
 def _batch_jaccard(a_flat, a_starts, b_flat, b_starts, n):
@@ -306,8 +257,6 @@ def with_jaccard(df: DataFrame, a_col: str, b_col: str,
     cardinalities (n_inter, n_union) from the same kernel pass — these
     are engine-portable (no float division), so an external SQL oracle
     can check the verify kernel value-for-value."""
-    import pyarrow as pa
-
     keep = [f for f in df.schema.fields if f.name not in (a_col, b_col)]
     extra = [T.StructField(out_col, T.DoubleType(), False)]
     if sizes:
@@ -323,8 +272,8 @@ def with_jaccard(df: DataFrame, a_col: str, b_col: str,
                 continue
             cols = {name: rb.column(i)
                     for i, name in enumerate(rb.schema.names)}
-            a_flat, a_starts = _list_flat(cols[a_col], pa)
-            b_flat, b_starts = _list_flat(cols[b_col], pa)
+            a_flat, a_starts = _list_flat(cols[a_col])
+            b_flat, b_starts = _list_flat(cols[b_col])
             jac, inter, union = _batch_jaccard(a_flat, a_starts,
                                                b_flat, b_starts, n)
             arrays = [cols[k] for k in keep_names] + [pa.array(jac)]
@@ -343,8 +292,6 @@ def with_simhash(df: DataFrame, shingles_col: str = "shingles",
     shingle column. Batch-vectorized: one unpackbits over the flat
     value buffer + segmented sums via add.reduceat — no per-row Python.
     North-rule addition, no reference counterpart."""
-    import pyarrow as pa
-
     keep = [f for f in df.schema.fields if f.name != shingles_col]
     out_schema = T.StructType(keep + [T.StructField(out_col,
                                                     T.LongType(), False)])
@@ -357,7 +304,7 @@ def with_simhash(df: DataFrame, shingles_col: str = "shingles",
                 continue
             cols = {name: rb.column(i)
                     for i, name in enumerate(rb.schema.names)}
-            flat, starts = _list_flat(cols[shingles_col], pa)
+            flat, starts = _list_flat(cols[shingles_col])
             lens = np.empty(n, dtype=np.int64)
             lens[:-1] = starts[1:] - starts[:-1]
             lens[-1] = len(flat) - starts[-1]

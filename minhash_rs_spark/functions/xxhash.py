@@ -1,7 +1,10 @@
-"""Pure-Python xxHash64 (public algorithm, Yann Collet) — used ONLY by
-the test oracle to reproduce Spark's `xxhash64()` token hashes
-driver-side. The hot path computes these JVM-side in codegen; this
-implementation is deliberately simple, not fast.
+"""Pure-Python xxHash64 (public algorithm, Yann Collet) — reproduces
+Spark's `xxhash64()` token hashes in Python. `kernel.tokenize` calls it
+once per distinct token of a batch on the Python tokenizer path
+(`udfs.shingle_sets`, the simhash workload's hot path) so that path's
+token ids equal the JVM codegen path's (`doc_assembly.
+assemble_token_docs`); the test oracle uses it too. This implementation
+is deliberately simple, not fast.
 
 Spark semantics (org.apache.spark.sql.catalyst.expressions.XxHash64):
 seed 42, input = the UTF-8 bytes of the string.

@@ -1,7 +1,7 @@
 """SimHash near-dup path (north-rule addition; no reference counterpart).
 
 sig = 64-bit per-bit majority vote over the doc's (uniformly mixed)
-shingle hashes (functions/udfs.simhash_udf). Near-duplicates = pairs with
+shingle hashes (functions/udfs.with_simhash). Near-duplicates = pairs with
 Hamming distance <= hamming_threshold.
 
 Candidate generation is pigeonhole block-LSH: split the 64-bit signature

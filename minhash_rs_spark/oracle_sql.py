@@ -293,7 +293,7 @@ def perm_multipliers(hash_seed: int, num_bands: int, band_size: int
 def perm_min_exprs(hash_seed: int, num_bands: int, band_size: int,
                    hhi: str = "hhi", hlo: str = "hlo") -> list[str]:
     """One MIN(...) aggregate per permutation: min over a doc's shingles
-    of the top-64 of (a*h) mod 2^128 (hashing.perm_hash_top64:
+    of the top-64 of (a*h) mod 2^128 (hashing.minhash_block:
     mulhi64(a_lo,h_lo) + a_lo*h_hi + a_hi*h_lo, wrapping)."""
     a_hi, a_lo = perm_multipliers(hash_seed, num_bands, band_size)
     return [

@@ -10,6 +10,7 @@ from minhash_rs_spark.functions.kernel import (
     SignatureKernel,
     clean_text,
     doc_shingles,
+    flatten_docs,
     jaccard_u64,
     tokenize,
 )
@@ -116,9 +117,9 @@ def test_minhash_estimates_jaccard():
     k = SignatureKernel(num_bands=64, band_size=1, ngram_size=3, hash_seed=5)
     base = " ".join(f"w{i}" for i in range(200))
     variant = " ".join((f"w{i}" if i % 5 else f"v{i}") for i in range(200))
-    sa, sb = k.shingles_batch([base, variant])
+    sa, sb = doc_shingles(base, 3), doc_shingles(variant, 3)
     true_j = jaccard_u64(sa, sb)
-    hv = k.minhash_from_shingles([sa, sb])
+    hv = k.minhash_from_flat(*flatten_docs([sa, sb]))
     est = (hv[0] == hv[1]).mean()
     assert abs(est - true_j) < 0.15
 
@@ -150,6 +151,53 @@ def test_flat_rolling_and_unique_match_per_doc():
                               H.rolling_poly_hashes(d, 5))
         assert np.array_equal(u_flat[u_starts[i]:uends[i]],
                               np.unique(H.rolling_poly_hashes(d, 5)))
+
+
+# TEXTS plus a NULL doc; "short", "" and "a b c d" are shorter than the
+# default ngram_size (5), so the short-doc fallback is exercised
+_DOCS = [(f"d{i}", t) for i, t in enumerate(TEXTS)] + [("dnull", None)]
+
+
+@pytest.mark.parametrize("mode", ["words", "bytes"])
+def test_shingle_sets_match_scalar_reference(spark, mode):
+    """The Python tokenizer path (udfs.shingle_sets: per-doc tokens ->
+    one flat batch -> rolling shingles -> lexsort dedup) equals the
+    per-doc scalar reference kernel.doc_shingles on every doc, including
+    a doc shorter than ngram_size, an empty doc and a NULL doc."""
+    from minhash_rs_spark.config import MinHashConfig
+    from minhash_rs_spark.functions.udfs import shingle_sets
+
+    docs = spark.createDataFrame(_DOCS, "conv_id string, doc_text string")
+    got = {r["conv_id"]: r for r in
+           shingle_sets(docs, MinHashConfig(tokenizer=mode)).collect()}
+    assert set(got) == {c for c, _ in _DOCS}
+    for c, t in _DOCS:
+        want = doc_shingles(t if t is not None else "", 5, mode)
+        sh = np.array(got[c]["shingles"], dtype=np.int64).view(np.uint64)
+        assert np.array_equal(sh, want), (c, mode)
+        assert got[c]["n_shingles"] == len(want)
+
+
+def test_band_signature_rows_exact_matches_kernel(spark):
+    """exact_override signature rows through Spark equal the kernel's
+    signatures_for_texts row for row, num_bands rows per doc, including
+    a NULL and an empty doc_text."""
+    from collections import Counter
+
+    from minhash_rs_spark.config import MinHashConfig
+    from minhash_rs_spark.functions.udfs import band_signature_rows_exact
+
+    cfg = MinHashConfig(exact_override=True)
+    docs = spark.createDataFrame(_DOCS, "conv_id string, doc_text string")
+    got = [tuple(r) for r in band_signature_rows_exact(docs, cfg).collect()]
+    assert Counter(r[0] for r in got) == {c: cfg.num_bands for c, _ in _DOCS}
+    hi, lo = SignatureKernel(
+        num_bands=cfg.num_bands, band_size=cfg.band_size,
+        hash_seed=cfg.hash_seed,
+        exact_override=True).signatures_for_texts([t for _, t in _DOCS])
+    want = [(c, b, int(hi[i, b].view(np.int64)), int(lo[i, b].view(np.int64)))
+            for i, (c, _) in enumerate(_DOCS) for b in range(cfg.num_bands)]
+    assert sorted(got) == sorted(want)
 
 
 def test_with_jaccard_matches_scalar_kernel(spark):

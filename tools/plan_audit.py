@@ -76,6 +76,17 @@ def main():
     checks.append(("bucket agg partial (map-side combine)",
                    p.count("HashAggregate") >= 2))
 
+    # 3b. exact_override signatures: like every shingle/signature UDF,
+    # one Arrow map over flat buffers — no pandas map node
+    from minhash_rs_spark.functions.udfs import band_signature_rows_exact
+
+    p = plan_of(band_signature_rows_exact(asm,
+                                          MinHashConfig(exact_override=True)))
+    sections.append(("band_signature_rows_exact", p, ["MapInArrow"]))
+    checks.append(("exact signatures: Arrow map node, no pandas map node",
+                   re.search(r"MapInArrow \(\d+\)", p) is not None
+                   and "MapInPandas" not in p))
+
     # 4. annotate join: assignments side should broadcast when small
     from minhash_rs_spark.operators.annotate import annotate_turns, cluster_assignments
     from minhash_rs_spark.operators.connected_components import connected_components
