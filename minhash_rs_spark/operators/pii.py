@@ -22,8 +22,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Java-regex / RE2 common-subset patterns (no backrefs, no lookaround).
+# The email pattern spells out both ASCII cases instead of a (?i) flag:
+# Java folds ASCII only under (?i), RE2 folds full Unicode (U+212A
+# KELVIN SIGN matches k), so explicit classes are what both engines
+# read alike. The text is matched and redacted as is, not lower-cased.
 PII_PATTERNS: dict[str, tuple[str, str]] = {
-    "email": (r"[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z][a-z]+", "<EMAIL>"),
+    "email": (r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z][A-Za-z]+",
+              "<EMAIL>"),
     "ssn": (r"\b[0-9]{3}-[0-9]{2}-[0-9]{4}\b", "<SSN>"),
     "phone": (r"\b[0-9]{3}[-. ][0-9]{3}[-. ][0-9]{4}\b", "<PHONE>"),
     "ipv4": (r"\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b",
@@ -39,7 +44,7 @@ def _redact(text: Column) -> Column:
 
 
 def _pii_counts(text: Column) -> tuple[dict[str, Column], Column]:
-    """(per-kind counts, total) on an already-normalized text column —
+    """(per-kind counts, total) on a null-coalesced text column —
     the single source of truth for both pii_stats and the
     drop_pii_docs kill predicate (and the DuckDB oracle mirror)."""
     counts = {k: F.regexp_count(text, F.lit(pat)).cast("long")
@@ -51,7 +56,7 @@ def _pii_counts(text: Column) -> tuple[dict[str, Column], Column]:
 
 
 def _norm_text(text_col: str) -> Column:
-    return F.lower(F.coalesce(F.col(text_col), F.lit("")))
+    return F.coalesce(F.col(text_col), F.lit(""))
 
 
 def pii_stats(docs: DataFrame, id_col: str = "doc_id",
@@ -60,7 +65,8 @@ def pii_stats(docs: DataFrame, id_col: str = "doc_id",
 
     Counts are taken on the ORIGINAL text (each kind independently,
     before any replacement), redaction is sequential in PII_PATTERNS
-    order so earlier tags can't be re-matched by later patterns.
+    order so earlier tags can't be re-matched by later patterns. The
+    redacted text keeps the original casing outside the tags.
     Output: (id, n_email, n_ssn, n_phone, n_ipv4, n_pii, redacted).
     """
     text = _norm_text(text_col)

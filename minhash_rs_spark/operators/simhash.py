@@ -92,7 +92,8 @@ def simhash_cc(shingles: DataFrame, hamming_threshold: int = 3,
 
     sigs feed three consumers (block grouping, block join-back, edge
     verification) — persisted here, released once CC has materialized
-    (connected_components localCheckpoints its input eagerly)."""
+    (connected_components localCheckpoints its input eagerly, then
+    labels it on the driver or in the star loop, by edge count)."""
     sigs = simhash_signatures(shingles).persist()
     try:
         edges = simhash_candidate_edges(sigs, num_blocks, pair_cap)

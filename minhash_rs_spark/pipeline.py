@@ -69,8 +69,9 @@ class PipelineResult:
         tests never see). Total count alone can't see an OFFSETTING
         failure (one conv duplicated while another is dropped), so the
         invariant requires BOTH the row count and the distinct-conv_id
-        count to equal the input count. Two extra single-column counts
-        over the already-grouped docs; cheap relative to the pipeline."""
+        count to equal the input count. Four count jobs: the assignment
+        rows, their distinct conv_ids and cc_ids, and the input's
+        distinct conv_ids."""
         n_docs = self.assignments.count()
         n_distinct = self.assignments.select("conv_id").distinct().count()
         n_clusters = self.assignments.select("cc_id").distinct().count()

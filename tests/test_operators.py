@@ -287,6 +287,27 @@ def test_repetition_stats_vs_bruteforce(spark):
                 // max(len(grams), 1), (doc_id, n)
 
 
+def _duckdb_pii(rows):
+    """{id: (n_email, n_ssn, n_phone, n_ipv4, n_pii, redacted)} computed
+    in DuckDB with the same expressions as the pii_scrub oracle twin."""
+    import duckdb
+
+    from minhash_rs_spark.operators.pii import PII_PATTERNS
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE d (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO d VALUES (?, ?)", rows)
+    counts = [f"len(regexp_extract_all(t, '{pat}'))"
+              for pat, _ in PII_PATTERNS.values()]
+    red = "t"
+    for pat, tag in PII_PATTERNS.values():
+        red = f"regexp_replace({red}, '{pat}', '{tag}', 'g')"
+    out = con.execute(f"""
+        SELECT doc_id, {", ".join(counts)}, {" + ".join(counts)}, {red}
+        FROM (SELECT doc_id, coalesce(text, '') AS t FROM d)""").fetchall()
+    return {r[0]: tuple(r[1:]) for r in out}
+
+
 def test_pii_stats_and_drop(spark):
     from minhash_rs_spark.operators.pii import drop_pii_docs, pii_stats
 
@@ -297,9 +318,17 @@ def test_pii_stats_and_drop(spark):
         (4, "clean document nothing to see"),
         (5, None),
         (6, "two mails a@b.io and c.d@e-f.org here"),
+        (7, "Mail ME at John@Example.COM"),
+        # U+212A KELVIN SIGN: RE2 case-folds it to k, Java does not
+        (8, "see \u212a@example.com"),
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     got = {r["doc_id"]: r.asDict() for r in pii_stats(df).collect()}
+    # the DuckDB oracle twin (RE2) reads every pattern as Java does
+    assert _duckdb_pii(rows) == {
+        i: tuple(r[c] for c in ("n_email", "n_ssn", "n_phone", "n_ipv4",
+                                "n_pii", "redacted"))
+        for i, r in got.items()}
 
     assert got[1]["n_email"] == 1 and got[1]["n_pii"] == 1
     assert "<EMAIL>" in got[1]["redacted"]
@@ -311,9 +340,13 @@ def test_pii_stats_and_drop(spark):
     assert got[4]["n_pii"] == 0 and got[4]["redacted"] == rows[3][1]
     assert got[5]["n_pii"] == 0 and got[5]["redacted"] == ""
     assert got[6]["n_email"] == 2
+    # redaction keeps the original casing around the tag
+    assert got[7]["n_email"] == 1 and got[7]["n_pii"] == 1
+    assert got[7]["redacted"] == "Mail ME at <EMAIL>"
+    assert got[8]["n_email"] == 0
 
     kept = sorted(r["doc_id"] for r in drop_pii_docs(df).collect())
-    assert kept == [4, 5]
+    assert kept == [4, 5, 8]
     # original columns untouched, no stats column leaks through
     assert set(drop_pii_docs(df).columns) == {"doc_id", "text"}
 

@@ -63,30 +63,39 @@ def test_stride_pairs_linear_in_input(spark, entry):
     assert 0 < n <= 500 * 9
 
 
-def test_cc_stride_clusters_matches_duckdb_oracle(spark, entry):
-    """CC-operator oracle anchor (VERDICT r4 #1): the REAL alternating
-    large/small-star loop over a deterministic input-derived edge list
-    (arithmetic x2/x3 edges over doc_ids + nonzero-overlap stride
-    pairs) must reproduce DuckDB's recursive-CTE min-label clustering
-    value-for-value — (doc_id, cc_id, cc_size) all hash-exact. The
-    x2/x3 graph has log-diameter components (e.g. 1-2-4-...-256 chains
-    merged via x3), so the star loop must genuinely iterate; a
+def test_cc_stride_clusters_matches_duckdb_oracle(spark, entry, monkeypatch):
+    """CC-operator oracle anchor (VERDICT r4 #1): connected_components
+    over a deterministic input-derived edge list (arithmetic x2/x3
+    edges over doc_ids + nonzero-overlap stride pairs) must reproduce
+    DuckDB's recursive-CTE min-label clustering value-for-value —
+    (doc_id, cc_id, cc_size) all hash-exact — on BOTH paths: the
+    driver-side labeling this edge set takes by default, and the
+    alternating large/small-star loop, forced by a bound of -1 edges.
+    The x2/x3 graph has log-diameter components (e.g. 1-2-4-...-256
+    chains merged via x3), so the star loop must genuinely iterate; a
     first-round-fixpoint bug would mislabel deep chains."""
+    from minhash_rs_spark.operators import connected_components as cc_mod
+
     if not Path(SF_DIR, "documents.parquet").exists():
         pytest.skip("testdata not present")
-    got = entry.queries()["cc_stride_clusters"](spark, SF_DIR).toPandas()
     con = duckdb.connect()
     con.execute("CREATE VIEW documents AS SELECT * FROM "
                 f"read_parquet('{SF_DIR}/documents.parquet')")
-    want = con.execute(entry.oracle_sql()["cc_stride_clusters"]).df()
-    g, w = _norm(got), _norm(want)
-    assert list(g.columns) == list(w.columns)
-    assert len(g) == len(w) and len(g) > 100
-    assert (g.values == w.values).all()
-    # topology sanity: multiple non-trivial components of distinct
-    # sizes — the anchor is only meaningful on a rich graph
-    assert got["cc_id"].nunique() > 20
-    assert got["cc_size"].max() >= 10
+    w = _norm(con.execute(entry.oracle_sql()["cc_stride_clusters"]).df())
+    for path in ("driver", "loop"):
+        with monkeypatch.context() as m:
+            if path == "loop":
+                m.setattr(cc_mod, "_DRIVER_CC_MAX_EDGES", -1)
+            got = entry.queries()["cc_stride_clusters"](spark,
+                                                        SF_DIR).toPandas()
+        g = _norm(got)
+        assert list(g.columns) == list(w.columns), path
+        assert len(g) == len(w) and len(g) > 100, path
+        assert (g.values == w.values).all(), path
+        # topology sanity: multiple non-trivial components of distinct
+        # sizes — the anchor is only meaningful on a rich graph
+        assert got["cc_id"].nunique() > 20, path
+        assert got["cc_size"].max() >= 10, path
 
 
 def test_minhash_clusters_matches_duckdb_oracle(spark, entry):
