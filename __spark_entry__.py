@@ -48,38 +48,6 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
-def _n_docs_meta(sf_dir: str) -> int | None:
-    """Exact document count straight from the parquet footer — zero
-    Spark jobs. Used as cluster_assignments' n_docs_hint so cc_idx can
-    take the single-window plan at driver-bench scale (identical
-    output; the hint is compared against the 2M bound, so a corpus too
-    big for one window still gets the scale-safe distributed plan).
-    Returns None (= distributed plan) when the layout is unreadable."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    p = f"{sf_dir}/documents.parquet"
-    try:
-        if os.path.isfile(p):
-            return pq.ParquetFile(p).metadata.num_rows
-        total = 0
-        for f in os.listdir(p):
-            fp = os.path.join(p, f)
-            if os.path.isdir(fp):
-                # partitioned/nested layout: a top-level-only sum would
-                # UNDERCOUNT, and the hint must be an upper bound —
-                # degrade to the distributed plan instead
-                return None
-            if f.endswith(".parquet"):
-                total += pq.ParquetFile(fp).metadata.num_rows
-        return total or None
-    except Exception:  # noqa: BLE001 — any metadata hiccup (OSError,
-        # ArrowInvalid) must degrade to the scale-safe distributed
-        # plan, never fail the query
-        return None
-
-
 def _synth_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents -> transcripts(conv_id, turn_idx, role, text, tool, ts):
     turn i holds chars [i*80, (i+1)*80); every doc yields >= 1 turn."""
@@ -144,10 +112,7 @@ def q_exact_dup_annotate(spark, sf_dir):
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("conv_id"),
         F.coalesce("text", F.lit("")).alias("doc_text"))
-    # footer-metadata count (no Spark job) bounds the corpus so cc_idx
-    # can take the single-window plan at test/bench scale while
-    # unhinted (unbounded) callers keep the distributed plan
-    asg = exact_dedup_assignments(docs, n_docs_hint=_n_docs_meta(sf_dir))
+    asg = exact_dedup_assignments(docs)
     return asg.select(
         F.col("conv_id").cast("long").alias("doc_id"),
         F.col("cc_id").cast("long").alias("cc_id"),
@@ -683,8 +648,7 @@ def q_minhash_clusters(spark, sf_dir):
     from minhash_rs_spark.pipeline import run_minhash
 
     turns = _synth_turns(spark, sf_dir)
-    res = run_minhash(spark, turns, MinHashConfig(),
-                      n_docs_hint=_n_docs_meta(sf_dir))
+    res = run_minhash(spark, turns, MinHashConfig())
     return res.assignments.select(
         F.col("conv_id").cast("long").alias("doc_id"),
         F.col("cc_id").cast("long").alias("cc_id"),
@@ -696,8 +660,7 @@ def q_minhash_clusters_verified(spark, sf_dir):
     from minhash_rs_spark.pipeline import run_minhash
 
     turns = _synth_turns(spark, sf_dir)
-    res = run_minhash(spark, turns, MinHashConfig(jaccard_threshold=0.8),
-                      n_docs_hint=_n_docs_meta(sf_dir))
+    res = run_minhash(spark, turns, MinHashConfig(jaccard_threshold=0.8))
     return res.assignments.select(
         F.col("conv_id").cast("long").alias("doc_id"),
         F.col("cc_id").cast("long").alias("cc_id"),
@@ -715,8 +678,7 @@ def q_simhash_clusters(spark, sf_dir):
     docs = assemble_documents(turns)
     sh = shingle_sets(docs, MinHashConfig())
     cc = simhash_cc(sh, hamming_threshold=3)
-    return cluster_assignments(docs, cc,
-                               n_docs_hint=_n_docs_meta(sf_dir)).select(
+    return cluster_assignments(docs, cc).select(
         F.col("conv_id").cast("long").alias("doc_id"),
         F.col("cc_id").cast("long").alias("cc_id"),
         F.col("cc_size").cast("long").alias("cc_size"),
@@ -735,8 +697,7 @@ def q_true_jaccard_pairs(spark, sf_dir):
     from minhash_rs_spark.pipeline import run_minhash
 
     turns = _synth_turns(spark, sf_dir)
-    res = run_minhash(spark, turns, MinHashConfig(),
-                      n_docs_hint=_n_docs_meta(sf_dir))
+    res = run_minhash(spark, turns, MinHashConfig())
     tok_docs = assemble_token_docs(turns)
     sh = shingle_sets_from_tokens(tok_docs, MinHashConfig())
     tj = intra_cluster_jaccards(res.assignments, sh)

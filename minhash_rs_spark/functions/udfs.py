@@ -285,13 +285,55 @@ def with_jaccard(df: DataFrame, a_col: str, b_col: str,
     return df.mapInArrow(fn, out_schema)
 
 
+# Shingles per unpackbits block in _simhash_flat. The bit matrix costs
+# 64 bytes per shingle: a whole Arrow batch (thousands of transcripts,
+# millions of shingles) unpacked at once is a ~150 MB transient per
+# Python worker; a block keeps it at ~4 MB.
+_SIMHASH_BLOCK = 1 << 16
+
+
+def _simhash_flat(flat: np.ndarray, starts: np.ndarray,
+                  lens: np.ndarray) -> np.ndarray:
+    """u64 SimHash per doc of a flat u64 value buffer (per-bit majority
+    vote, ties set the bit; an empty doc hashes to 0).
+
+    Docs are taken in runs of about _SIMHASH_BLOCK values; a doc is
+    never split, so a block exceeds the target only by its last doc."""
+    n = len(starts)
+    sums = np.zeros((n, 64), dtype=np.int64)
+    # block i starts at the doc holding value i * _SIMHASH_BLOCK
+    bounds = np.unique(np.concatenate([
+        [0],
+        np.searchsorted(starts, np.arange(_SIMHASH_BLOCK, len(flat),
+                                          _SIMHASH_BLOCK), side="right") - 1,
+        [n]]))
+    for d0, d1 in zip(bounds[:-1], bounds[1:]):
+        nz = lens[d0:d1] > 0
+        if not nz.any():
+            continue
+        v0 = starts[d0]
+        v1 = starts[d1] if d1 < n else len(flat)
+        # bits: (values, 64) 0/1; little-endian byte order within each
+        # u64 — consistent across rows, so the vote per bit position is
+        # well-defined
+        bits = np.unpackbits(flat[v0:v1].view(np.uint8)).reshape(-1, 64)
+        # segment only over non-empty rows: their starts are strictly
+        # increasing, in-bounds, and contiguous (empty rows contribute no
+        # values), which is exactly what reduceat requires
+        sums[d0:d1][nz] = np.add.reduceat(bits, starts[d0:d1][nz] - v0,
+                                          axis=0)
+    votes = (sums * 2 >= lens[:, None]) & (lens > 0)[:, None]
+    return np.packbits(votes.astype(np.uint8),
+                       axis=1).view(np.uint64).reshape(-1)
+
+
 def with_simhash(df: DataFrame, shingles_col: str = "shingles",
                  out_col: str = "simhash") -> DataFrame:
     """Append the 64-bit SimHash (per-bit majority vote over the
     already-uniform shingle hashes; ties set the bit) and drop the
-    shingle column. Batch-vectorized: one unpackbits over the flat
-    value buffer + segmented sums via add.reduceat — no per-row Python.
-    North-rule addition, no reference counterpart."""
+    shingle column. Batch-vectorized (_simhash_flat): unpackbits over
+    the flat value buffer + segmented sums via add.reduceat — no
+    per-row Python. North-rule addition, no reference counterpart."""
     keep = [f for f in df.schema.fields if f.name != shingles_col]
     out_schema = T.StructType(keep + [T.StructField(out_col,
                                                     T.LongType(), False)])
@@ -308,23 +350,7 @@ def with_simhash(df: DataFrame, shingles_col: str = "shingles",
             lens = np.empty(n, dtype=np.int64)
             lens[:-1] = starts[1:] - starts[:-1]
             lens[-1] = len(flat) - starts[-1]
-            sig = np.zeros(n, dtype=np.uint64)
-            nz = lens > 0
-            if nz.any():
-                # bits: (total_values, 64) 0/1; little-endian byte order
-                # within each u64 — consistent across rows, so the vote
-                # per bit position is well-defined
-                bits = np.unpackbits(flat.view(np.uint8)).reshape(-1, 64)
-                # segment only over non-empty rows: their starts are
-                # strictly increasing, in-bounds, and contiguous (empty
-                # rows contribute no values), which is exactly what
-                # reduceat requires
-                sums_nz = np.add.reduceat(bits, starts[nz], axis=0)
-                sums = np.zeros((n, 64), dtype=sums_nz.dtype)
-                sums[nz] = sums_nz
-                votes = (sums * 2 >= lens[:, None]) & nz[:, None]
-                sig = np.packbits(votes.astype(np.uint8),
-                                  axis=1).view(np.uint64).reshape(-1)
+            sig = _simhash_flat(flat, starts, lens)
             yield pa.RecordBatch.from_arrays(
                 [cols[k] for k in keep_names]
                 + [pa.array(sig.view(np.int64))],

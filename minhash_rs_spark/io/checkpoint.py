@@ -111,8 +111,8 @@ class CheckpointManager:
     def rows_out(self, stage: str) -> int | None:
         """Committed row count of a stage from its manifest record, or
         None when the stage isn't committed (or checkpointing is off).
-        A local JSONL read — callers use it as a free n_docs_hint-style
-        bound (pipeline.run_minhash) without launching a Spark job."""
+        A local JSONL read of the lineage counters stage() recorded —
+        no Spark job."""
         if self.base_dir is None or not self.committed(stage):
             return None
         for r in reversed(self._manifest_rows()):

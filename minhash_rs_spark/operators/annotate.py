@@ -19,42 +19,38 @@ from pyspark.sql import functions as F
 
 def cluster_assignments(docs: DataFrame, cc: DataFrame,
                         with_idx: bool = True,
-                        idx_partitions: int | None = None,
                         n_docs_hint: int | None = None) -> DataFrame:
     """Full per-conversation cluster table (conv_id, cc_id, cc_size[, cc_idx]).
 
     docs: one row per conv_id. cc: (conv_id, cc_id) for non-singletons.
     Singletons get cc_id = own conv_id (C3, ref src/main.rs:1089-1099).
+    Pass with_idx=False on paths that only need sizes or survivor
+    election (prune/dedup mode, histograms); survivors() below is
+    idx-free by construction.
 
-    cc_size is algebraic (groupBy + join), never a window: a window
-    over partitionBy(cc_id) lands a degenerate mega-component (e.g.
-    every empty doc clustering together) in a single task, while the
-    groupBy's map-side partial aggregation absorbs it. cc_idx (the
-    per-member ordinal of the reference's annotation quad,
-    src/main.rs:1256-1319) is computed DISTRIBUTED (_cc_idx below) —
-    no whole-component window task even for a mega-component. Pass
-    with_idx=False on paths that only need sizes or survivor election
-    (prune/dedup mode, histograms); survivors() below is idx-free by
-    construction.
+    With with_idx=True the plan is chosen from a measurement taken
+    here: one count of cc. cc is read twice (count, then the plan), so
+    callers pass a pinned or table-backed cc, never a lazy expensive
+    lineage. Every non-singleton component is a subset of cc, so |cc|
+    bounds the largest component:
+      - |cc| <= _CC_IDX_SINGLE_WINDOW_MAX: one cc_id window computes
+        cc_size (full-frame count) and cc_idx (row_number) from a
+        single exchange;
+      - larger: cc_size is algebraic (groupBy + join-back, whose
+        map-side partial aggregation absorbs a mega-component) and
+        cc_idx the distributed ordinal of _cc_idx — no task ever
+        buffers a whole component.
+    Both plans give the same rows in the same column order.
 
-    n_docs_hint: caller-known (or cheaply countable, e.g. parquet
-    metadata) total document count; when provided and small it selects
-    the single-window cc_idx fast path (see _cc_idx) — callers that
-    cannot bound their input leave it None and get the scale-safe
-    distributed plan.
+    n_docs_hint is accepted and ignored: existing callers still pass it.
     """
     labeled = (docs.select("conv_id")
                .join(cc, "conv_id", "left")
                .select("conv_id", F.coalesce("cc_id", "conv_id").alias("cc_id")))
-    if (with_idx and n_docs_hint is not None
-            and n_docs_hint <= _CC_IDX_SINGLE_WINDOW_MAX):
-        # fused small-input plan (round 7): cc_size and cc_idx from ONE
-        # cc_id exchange — the count uses the same ordered window spec
-        # with a full-partition frame so both expressions share a single
-        # Window operator, replacing the sizes groupBy + join-back
-        # (2 extra exchanges). Only valid under the hint bound: a
-        # full-frame count window buffers the component in one task,
-        # which the unhinted (unbounded) path below must never do.
+    if with_idx and cc.count() <= _CC_IDX_SINGLE_WINDOW_MAX:
+        # the count uses the same ordered window spec with a
+        # full-partition frame, so both expressions share one Window
+        # operator
         w = Window.partitionBy("cc_id").orderBy("conv_id")
         wf = w.rowsBetween(Window.unboundedPreceding,
                            Window.unboundedFollowing)
@@ -66,15 +62,16 @@ def cluster_assignments(docs: DataFrame, cc: DataFrame,
     sizes = labeled.groupBy("cc_id").agg(F.count(F.lit(1)).alias("cc_size"))
     out = labeled.join(sizes, "cc_id").select("conv_id", "cc_id", "cc_size")
     if with_idx:
-        out = _cc_idx(out, idx_partitions, n_docs_hint)
+        out = _cc_idx(out)
     return out
 
 
-# Below this many total docs the single-window cc_idx plan wins: even a
-# degenerate everything-in-one-component input is bounded by the total,
-# so the worst window task sorts <= 2M narrow rows (~100 MB) — while the
-# distributed plan's fixed cost (range-sampler job + two window stages +
-# offsets join, ~+1 s of stage barriers at sf0.1) dwarfs the work.
+# Largest duplicate table (non-singleton members, the rows of cc) that
+# takes the single-window plan. A component never has more members
+# than cc has rows, so the worst window task sorts <= 2M narrow rows
+# (~100 MB), while the distributed plan's fixed cost (range-sampler
+# job + two window stages + offsets join, ~+1 s of stage barriers at
+# sf0.1) dwarfs the work below it.
 _CC_IDX_SINGLE_WINDOW_MAX = 2_000_000
 
 
@@ -89,31 +86,25 @@ def _cc_idx_ranked(out: DataFrame, parts: int) -> DataFrame:
     return base.withColumn("_lrank", F.row_number().over(wl) - F.lit(1))
 
 
-def _cc_idx(out: DataFrame, idx_partitions: int | None = None,
-            n_docs_hint: int | None = None) -> DataFrame:
-    """cc_idx = rank of conv_id within its component — distributed
-    (VERDICT r3 #4: the old partitionBy(cc_id) window serialized a
-    mega-component into one sort task).
+def _cc_idx(out: DataFrame) -> DataFrame:
+    """cc_idx = rank of conv_id within its component, distributed: the
+    plan cluster_assignments runs when cc is too large for one cc_id
+    window (a partitionBy(cc_id) window would serialize a
+    mega-component into one sort task, VERDICT r3 #4).
 
-    With a caller-supplied n_docs_hint <= _CC_IDX_SINGLE_WINDOW_MAX the
-    plain partitionBy(cc_id) window is used instead — identical output
-    (asserted in tests), no degenerate-input hazard because the hint
-    bounds every component. No hint -> distributed plan (scale-safe
-    default).
-
-    Order-preserving two-phase ordinal:
-      1. range-repartition by (cc_id, conv_id) into `idx_partitions`
-         splits — range partitioning is ORDER-COMPATIBLE: within a
-         component, every member in partition i sorts before every
-         member in partition j>i, and no partition exceeds ~N/parts
-         rows regardless of component skew (the range sampler splits a
-         mega-component across partitions);
+    Order-preserving two-phase ordinal over spark.sql.shuffle.partitions
+    range splits:
+      1. range-repartition by (cc_id, conv_id) — range partitioning is
+         ORDER-COMPATIBLE: within a component, every member in
+         partition i sorts before every member in partition j>i, and no
+         partition exceeds ~N/parts rows regardless of component skew
+         (the range sampler splits a mega-component across partitions);
       2. local rank: row_number over (partition-id, cc_id) — the
          largest window group is one component's slice WITHIN one range
          split, bounded by the split size;
       3. offsets: per-(cc_id, partition-id) counts (algebraic groupBy),
          cumulative-summed per component over partition-id order — a
-         window over <= idx_partitions rows per component;
+         window over <= parts rows per component;
       4. cc_idx = local rank + offset.
 
     Identical to row_number() over (partition by cc_id order by
@@ -136,13 +127,7 @@ def _cc_idx(out: DataFrame, idx_partitions: int | None = None,
     independent either way (range partitioning is order-compatible);
     only the row-preservation guarantee needed the cut.
     """
-    if (n_docs_hint is not None
-            and n_docs_hint <= _CC_IDX_SINGLE_WINDOW_MAX):
-        w = Window.partitionBy("cc_id").orderBy("conv_id")
-        return out.withColumn("cc_idx",
-                              (F.row_number().over(w) - F.lit(1)).cast("int"))
-    parts = idx_partitions or int(
-        out.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    parts = int(out.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     # lazy localCheckpoint: the range partitioner's sampling job is the
     # first action — without the cut it re-executes the whole upstream
     # subtree (fingerprint/groupBy/joins) once for the sample and again

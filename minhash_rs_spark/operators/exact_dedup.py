@@ -60,13 +60,13 @@ def exact_cc(docs: DataFrame, text_col: str = "doc_text",
 
 
 def exact_dedup_assignments(docs: DataFrame, text_col: str = "doc_text",
-                            with_idx: bool = True,
-                            n_docs_hint: int | None = None) -> DataFrame:
+                            with_idx: bool = True) -> DataFrame:
     """(conv_id, cc_id, cc_size[, cc_idx]) under exact-text identity
     (output analog of the `exact_dedup` struct, exact_dedup.rs:204-210).
-    with_idx=False skips the in-component window (annotate.py);
-    n_docs_hint (when the caller can bound the corpus, e.g. via parquet
-    metadata) selects the small-input single-window cc_idx plan."""
-    return cluster_assignments(docs.select("conv_id"),
-                               exact_cc(docs, text_col), with_idx=with_idx,
-                               n_docs_hint=n_docs_hint)
+    with_idx=False skips the in-component ordinal (annotate.py). With
+    it, exact_cc is pinned once: cluster_assignments counts it to pick
+    its cc_idx plan and then reads it again."""
+    cc = exact_cc(docs, text_col)
+    if with_idx:
+        cc = cc.localCheckpoint(eager=False)
+    return cluster_assignments(docs.select("conv_id"), cc, with_idx=with_idx)

@@ -89,6 +89,11 @@ class PipelineResult:
         return self.stats
 
 
+# run_minhash(upto=) stage names, in pipeline order
+UPTO_STAGES = ("docs", "shingles", "sigs", "edges", "verified_edges", "cc",
+               "assignments")
+
+
 def config_fingerprint(cfg: MinHashConfig, input_token: str = "") -> str:
     """Stage-identity fingerprint: sink-mode and sampling knobs
     (annotate_only, subsample_*) and the checkpoint location itself do
@@ -108,21 +113,17 @@ def run_minhash(spark: SparkSession, turns: DataFrame,
                 upto: str | None = None,
                 n_docs_hint: int | None = None) -> PipelineResult:
     """upto: stop after materializing the named checkpoint stage
-    ("docs" | "shingles" | "edges" | "verified_edges" | "cc" |
-    "assignments") — the Spark analog of the reference\'s granular
+    (one of UPTO_STAGES) — the Spark analog of the reference\'s granular
     phase subcommands (hash-only/gather-edges/build-uf, README.md:84-91
     of the reference); requires cfg.checkpoint_dir so later phases
     resume from the committed tables. Downstream fields of the result
-    are None.
+    are None. Any other name raises ValueError.
 
-    n_docs_hint: caller-known upper bound on the CONVERSATION count
-    (a row/turn count is a valid bound). Small bounds let
-    cluster_assignments take the single-window cc_idx plan —
-    identical output, none of the distributed plan's fixed stage
-    barriers (~0.5-1 s at sf0.1). When the docs stage is already
-    checkpointed, the bound is read from its manifest for free;
-    unbounded callers leave it None and get the scale-safe
-    distributed plan."""
+    n_docs_hint is accepted and ignored: existing callers still pass it
+    (cluster_assignments sizes its cc_idx plan from the cc table)."""
+    if upto is not None and upto not in UPTO_STAGES:
+        raise ValueError(f"upto={upto!r}: expected one of "
+                         f"{', '.join(UPTO_STAGES)}")
     cfg = cfg or MinHashConfig()
     if upto is not None and cfg.checkpoint_dir is None:
         raise ValueError("upto= requires cfg.checkpoint_dir (phase resume)")
@@ -224,14 +225,8 @@ def run_minhash(spark: SparkSession, turns: DataFrame,
     # assignments need only the conversation-id set (cluster_assignments
     # reads docs.select("conv_id")) — doc_ids is a single-column
     # distinct over turns, so the assembled docs are never re-read here
-    if n_docs_hint is None:
-        # the committed docs manifest already carries the exact doc
-        # count (io/checkpoint.py lineage counters) — a local JSONL
-        # read, no Spark job
-        n_docs_hint = ckpt.rows_out("docs")
-    assignments = ckpt.stage(
-        "assignments",
-        lambda: cluster_assignments(doc_ids, cc, n_docs_hint=n_docs_hint))
+    assignments = ckpt.stage("assignments",
+                             lambda: cluster_assignments(doc_ids, cc))
     if cfg.checkpoint_dir is None:
         # CC eagerly materialized everything upstream (its entry
         # localCheckpoint); keep assignments resident, release the rest
@@ -262,6 +257,9 @@ def run_exact_dedup(spark: SparkSession, turns: DataFrame,
     docs = ckpt.stage("docs", lambda: assemble_documents(
         turns, cfg.conv_col, cfg.order_col, cfg.text_col))
     cc = ckpt.stage("exact_cc", lambda: exact_cc(docs))
+    if cfg.checkpoint_dir is None:
+        # pinned once: cluster_assignments counts cc, then reads it again
+        cc = cc.localCheckpoint(eager=False)
     assignments = ckpt.stage("exact_assignments",
                              lambda: cluster_assignments(docs, cc))
     output = (annotate_turns(turns, assignments, cfg.conv_col, "exact_dedup")

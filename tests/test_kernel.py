@@ -253,6 +253,32 @@ def test_with_simhash_matches_rowwise(spark):
         assert got[i] == rowwise(vals), i
 
 
+def test_simhash_blocks_match_whole_batch(monkeypatch):
+    """_simhash_flat over blocks of a few values (docs longer than a
+    block, runs of empty docs at the ends and inside) == the per-doc
+    majority vote."""
+    import numpy as np
+
+    from minhash_rs_spark.functions import udfs
+
+    monkeypatch.setattr(udfs, "_SIMHASH_BLOCK", 7)
+    rng = np.random.RandomState(11)
+    lens = rng.randint(0, 20, size=200).astype(np.int64)
+    lens[rng.rand(200) < 0.25] = 0
+    lens[:3] = lens[-3:] = 0
+    starts = np.zeros(len(lens), dtype=np.int64)
+    np.cumsum(lens[:-1], out=starts[1:])
+    flat = rng.randint(-2**62, 2**62, size=lens.sum()).view(np.uint64)
+    got = udfs._simhash_flat(flat, starts, lens)
+    for i, (s, n) in enumerate(zip(starts, lens)):
+        want = 0
+        if n:
+            bits = np.unpackbits(flat[s:s + n].view(np.uint8)).reshape(n, 64)
+            votes = bits.sum(axis=0) * 2 >= n
+            want = np.packbits(votes.astype(np.uint8)).view(np.uint64)[0]
+        assert got[i] == want, i
+
+
 def test_reference_config_exact_override_sense():
     """The reference's exact_override boolean is inverted relative to
     its name (src/main.rs:522-533: false -> doc-level hash_object,

@@ -1,6 +1,8 @@
 """Operator-level tests: subsample semantics, SimHash path, suffix-array
 containment, checkpoint/resume, textstats, similarity, multimodal."""
 
+import contextlib
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -853,11 +855,28 @@ def test_mega_component_survivors_window_free(spark):
     assert asg.where("cc_size = 20000").count() == 20000
 
 
-def test_cc_idx_distributed_equals_window_formula(spark):
+@contextlib.contextmanager
+def _distributed_cc_idx(spark, monkeypatch, parts):
+    """Force cluster_assignments onto the distributed cc_idx plan (the
+    single-window bound lowered below any cc size) over `parts` range
+    splits (spark.sql.shuffle.partitions, read by _cc_idx)."""
+    from minhash_rs_spark.operators import annotate
+
+    monkeypatch.setattr(annotate, "_CC_IDX_SINGLE_WINDOW_MAX", -1)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+        monkeypatch.undo()
+
+
+def test_cc_idx_distributed_equals_window_formula(spark, monkeypatch):
     """_cc_idx (range-partition + local rank + offsets) must equal
     row_number over (partition by cc_id order by conv_id) - 1 exactly,
     on an adversarial mix: random components, a dominant component,
-    singletons — across several idx_partitions values including
+    singletons — across several range-split counts including
     parts > rows and parts = 1."""
     import random
 
@@ -881,14 +900,14 @@ def test_cc_idx_distributed_equals_window_formula(spark):
                 Window.partitionBy("cc_id").orderBy("conv_id")) - F.lit(1)
         ).collect()}
     for parts in (1, 7, 64, 5000):
-        got = {(r["conv_id"], r["cc_id"], r["cc_idx"])
-               for r in cluster_assignments(docs, cc, with_idx=True,
-                                            idx_partitions=parts)
-               .select("conv_id", "cc_id", "cc_idx").collect()}
+        with _distributed_cc_idx(spark, monkeypatch, parts):
+            got = {(r["conv_id"], r["cc_id"], r["cc_idx"])
+                   for r in cluster_assignments(docs, cc, with_idx=True)
+                   .select("conv_id", "cc_id", "cc_idx").collect()}
         assert got == expect, parts
 
 
-def test_cc_idx_row_preservation_without_exchange_reuse(spark):
+def test_cc_idx_row_preservation_without_exchange_reuse(spark, monkeypatch):
     """Round-5 data-loss regression: _cc_idx's ranked stage feeds two
     consumers, and with exchange reuse unavailable the two sides used
     to plan SEPARATE range exchanges whose samplers (seeded by RDD id)
@@ -920,17 +939,18 @@ def test_cc_idx_row_preservation_without_exchange_reuse(spark):
     old = spark.conf.get("spark.sql.exchange.reuse", "true")
     try:
         spark.conf.set("spark.sql.exchange.reuse", "false")
-        got = {(r["conv_id"], r["cc_id"], r["cc_idx"])
-               for r in cluster_assignments(docs, cc, with_idx=True,
-                                            idx_partitions=16)
-               .select("conv_id", "cc_id", "cc_idx").collect()}
+        with _distributed_cc_idx(spark, monkeypatch, 16):
+            got = {(r["conv_id"], r["cc_id"], r["cc_idx"])
+                   for r in cluster_assignments(docs, cc, with_idx=True)
+                   .select("conv_id", "cc_id", "cc_idx").collect()}
     finally:
         spark.conf.set("spark.sql.exchange.reuse", old)
     assert len(got) == len(expect)
     assert got == expect
 
 
-def test_mega_component_cc_idx_no_whole_component_window_task(spark):
+def test_mega_component_cc_idx_no_whole_component_window_task(spark,
+                                                             monkeypatch):
     """VERDICT r3 #4: annotate-mode cc_idx on a planted 1M-member single
     component — every Window in the plan partitions by the range-split
     id (never by cc_id alone over raw members), no (pid, cc_id) window
@@ -942,7 +962,8 @@ def test_mega_component_cc_idx_no_whole_component_window_task(spark):
     docs = spark.range(n).select(
         F.format_string("c%07d", "id").alias("conv_id"))
     cc = docs.select("conv_id", F.lit("c0000000").alias("cc_id"))
-    asg = cluster_assignments(docs, cc, with_idx=True, idx_partitions=parts)
+    with _distributed_cc_idx(spark, monkeypatch, parts):
+        asg = cluster_assignments(docs, cc, with_idx=True)
 
     plan = asg._jdf.queryExecution().executedPlan().toString()
     win_specs = [ln for ln in plan.splitlines()
@@ -1197,15 +1218,14 @@ def test_verified_edges_prefilter_is_semantics_preserving(spark):
     assert ("b", "a") in kept
 
 
-def test_cc_idx_small_input_fast_path_identical(spark):
-    """cluster_assignments with n_docs_hint below the single-window
-    bound must produce EXACTLY the distributed plan's output (same
+def test_cc_idx_small_input_fast_path_identical(spark, monkeypatch):
+    """cluster_assignments on a cc table below the single-window bound
+    must produce EXACTLY the distributed plan's output (same
     adversarial mix as the equivalence test above), and the chosen plan
     must actually be the single window — no range exchange."""
     import random
 
-    from minhash_rs_spark.operators.annotate import (
-        _CC_IDX_SINGLE_WINDOW_MAX, cluster_assignments)
+    from minhash_rs_spark.operators.annotate import cluster_assignments
 
     rng = random.Random(11)
     rows = [(f"c{i:05d}", f"v{rng.randrange(60):03d}") for i in range(1200)]
@@ -1213,8 +1233,9 @@ def test_cc_idx_small_input_fast_path_identical(spark):
     cc = spark.createDataFrame(rows, ["conv_id", "cc_id"])
     docs = cc.select("conv_id")
 
-    dist = cluster_assignments(docs, cc, with_idx=True)
-    fast = cluster_assignments(docs, cc, with_idx=True, n_docs_hint=2000)
+    with _distributed_cc_idx(spark, monkeypatch, 8):
+        dist = cluster_assignments(docs, cc, with_idx=True)
+    fast = cluster_assignments(docs, cc, with_idx=True)
     key = lambda df: {(r["conv_id"], r["cc_id"], r["cc_size"], r["cc_idx"])
                       for r in df.collect()}
     assert key(fast) == key(dist)
@@ -1227,14 +1248,42 @@ def test_cc_idx_small_input_fast_path_identical(spark):
     # the fast path plans a plain window, no RangePartitioning exchange
     plan = fast._jdf.queryExecution().executedPlan().toString()
     assert "rangepartitioning" not in plan.lower()
-    # a hint above the bound falls back to the distributed plan — whose
-    # range exchange sits behind the _pid-consistency lineage cut
+    # a cc table above the bound falls back to the distributed plan —
+    # whose range exchange sits behind the _pid-consistency lineage cut
     # (round-5 fix), so its downstream signature is the ExistingRDD
     # scan + _pid-carrying offsets window, not a visible range exchange
-    big = cluster_assignments(docs, cc, with_idx=True,
-                              n_docs_hint=_CC_IDX_SINGLE_WINDOW_MAX + 1)
-    big_plan = big._jdf.queryExecution().executedPlan().toString()
+    big_plan = dist._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" in big_plan and "_pid" in big_plan
+
+
+def test_cc_idx_plan_bound(spark, monkeypatch):
+    """The cc_idx plan bound is inclusive on the cc row count: exactly
+    `bound` cc rows take the single window, `bound + 1` the distributed
+    plan, and both give the same rows in the same column order."""
+    from minhash_rs_spark.operators import annotate
+
+    cc = spark.createDataFrame(
+        [("b", "a"), ("c", "a"), ("a", "a"), ("e", "d"), ("d", "d")],
+        "conv_id string, cc_id string")
+    docs = spark.createDataFrame([(c,) for c in "abcdefg"], "conv_id string")
+    bound = cc.count()
+    plan = lambda df: df._jdf.queryExecution().executedPlan().toString()
+
+    monkeypatch.setattr(annotate, "_CC_IDX_SINGLE_WINDOW_MAX", bound)
+    window = annotate.cluster_assignments(docs, cc)
+    assert "rangepartitioning" not in plan(window).lower()
+    assert "_pid" not in plan(window)
+    monkeypatch.setattr(annotate, "_CC_IDX_SINGLE_WINDOW_MAX", bound - 1)
+    dist = annotate.cluster_assignments(docs, cc)
+    assert "ExistingRDD" in plan(dist) and "_pid" in plan(dist)
+
+    assert window.columns == dist.columns == [
+        "conv_id", "cc_id", "cc_size", "cc_idx"]
+    rows = sorted(map(tuple, window.collect()))
+    assert rows == sorted(map(tuple, dist.collect()))
+    assert rows == [("a", "a", 3, 0), ("b", "a", 3, 1), ("c", "a", 3, 2),
+                    ("d", "d", 2, 0), ("e", "d", 2, 1), ("f", "f", 1, 0),
+                    ("g", "g", 1, 0)]
 
 
 def test_subsample_survivors_invariant_to_partitioning_and_order(spark):

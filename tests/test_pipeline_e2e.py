@@ -175,6 +175,20 @@ def test_dedup_idempotent(spark, tiny_corpus):
     assert twice.count() == once.count()
 
 
+def test_run_minhash_upto_rejects_unknown_stage(spark, tiny_corpus, tmp_path):
+    """A misspelled upto= stage ("edge") raises before any stage runs,
+    naming every accepted stage, instead of running the whole pipeline."""
+    turns, _ = tiny_corpus
+    ck = tmp_path / "ck"
+    with pytest.raises(ValueError) as err:
+        run_minhash(spark, turns, MinHashConfig(checkpoint_dir=str(ck)),
+                    upto="edge")
+    for name in ("docs", "shingles", "sigs", "edges", "verified_edges", "cc",
+                 "assignments"):
+        assert f"{name}," in f"{err.value},"
+    assert not ck.exists()
+
+
 def test_exact_dedup_mode(spark, tiny_corpus):
     turns, pairs = tiny_corpus
     res = run_exact_dedup(spark, turns, MinHashConfig())

@@ -234,7 +234,10 @@ def main():
     # The ranked stage sits behind _cc_idx's lineage cut (the round-5
     # _pid-consistency fix), so its plan is audited via _cc_idx_ranked;
     # the downstream plan is audited for the cut itself + the bounded
-    # offsets window.
+    # offsets window. cluster_assignments takes the distributed plan
+    # only above _CC_IDX_SINGLE_WINDOW_MAX cc rows, so the bound is
+    # lowered to force it on this small input.
+    import minhash_rs_spark.operators.annotate as annotate_mod
     from minhash_rs_spark.operators.annotate import _cc_idx_ranked
 
     p_rk = plan_of(_cc_idx_ranked(
@@ -246,8 +249,13 @@ def main():
                    "(_pid)", bool(_ws) and all("_pid" in ln for ln in _ws)))
     checks.append(("cc_idx ranked stage uses range partitioning",
                    "rangepartitioning" in p_rk))
-    p = plan_of(cluster_assignments(asm.select("conv_id"), cc_df,
-                                    with_idx=True))
+    bound = annotate_mod._CC_IDX_SINGLE_WINDOW_MAX
+    annotate_mod._CC_IDX_SINGLE_WINDOW_MAX = -1
+    try:
+        p = plan_of(cluster_assignments(asm.select("conv_id"), cc_df,
+                                        with_idx=True))
+    finally:
+        annotate_mod._CC_IDX_SINGLE_WINDOW_MAX = bound
     sections.append(("cluster_assignments with_idx=True (distributed "
                      "cc_idx, post-cut)", p, ["Window"]))
     checks.append(("cc_idx ranked stage pinned behind one lineage cut "
@@ -300,13 +308,13 @@ def main():
     checks.append(("verify kernel runs once (single Arrow map stage)",
                    len(re.findall(r"MapInArrow \(\d+\)", p)) == 1))
 
-    # 17. cc_idx small-input fast path: hinted -> plain window, no
-    # range exchange; unhinted -> distributed (range) plan
+    # 17. cc_idx small-input plan: a cc table under the bound (here the
+    # exact_cc of the audit corpus) -> plain window, no range exchange
     p_fast = plan_of(cluster_assignments(asm.select("conv_id"), cc_df,
-                                         with_idx=True, n_docs_hint=100))
-    checks.append(("cc_idx hinted small input: no range partitioning",
+                                         with_idx=True))
+    checks.append(("cc_idx small cc: no range partitioning",
                    "rangepartitioning" not in p_fast))
-    checks.append(("cc_idx hinted small input: single cc_id window",
+    checks.append(("cc_idx small cc: single cc_id window",
                    "windowspecdefinition" in p_fast))
 
     # 18. CC oracle anchor query: equi-joins only end-to-end
