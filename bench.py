@@ -161,22 +161,9 @@ def main():
     warmups = int(os.environ.get("SPARK_GRAFT_WARMUP_RUNS", "1"))
     timed_runs = max(1, int(os.environ.get("SPARK_GRAFT_TIMED_RUNS", "1")))
     warmup_walls = []
-    # n_big (the turn count, already materialized for the cache warm) is
-    # a valid conversation-count bound: under _CC_IDX_SINGLE_WINDOW_MAX
-    # it selects the single-window cc_idx plan — identical output,
-    # without the distributed plan's ~0.5-1 s of fixed stage barriers.
-    # Scaling corpora (>2M turns) exceed the bound and keep the
-    # scale-safe distributed plan, exactly as at 100 TB.
-    # SPARK_GRAFT_NO_DOCS_HINT=1: A/B hook — time the unhinted
-    # (distributed cc_idx) flagship to isolate the fast path's saving.
-    if os.environ.get("SPARK_GRAFT_NO_DOCS_HINT") == "1":
-        n_big_hint = None
-    else:
-        n_big_hint = n_big
     for i in range(warmups):
         t0 = time.time()
-        run_minhash(spark, big_turns, MinHashConfig(),
-                    n_docs_hint=n_big_hint).assignments.count()
+        run_minhash(spark, big_turns, MinHashConfig()).assignments.count()
         warmup_walls.append(round(time.time() - t0, 3))
         print(f"# flagship warmup {i}: {warmup_walls[-1]:.1f}s",
               file=sys.stderr)
@@ -196,8 +183,7 @@ def main():
         walls, cpus_l = [], []
         for _ in range(timed_runs):
             cpu0, t0 = tree_cpu_seconds(), time.time()
-            res = run_minhash(spark, big_turns, MinHashConfig(),
-                              n_docs_hint=n_big_hint)
+            res = run_minhash(spark, big_turns, MinHashConfig())
             n_asg = res.assignments.count()
             walls.append(round(time.time() - t0, 3))
             cpus_l.append(round(tree_cpu_seconds() - cpu0, 1))

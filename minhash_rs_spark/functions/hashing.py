@@ -247,25 +247,41 @@ def rolling_poly_from_flat(flat: np.ndarray, starts: np.ndarray,
     return out, out_starts
 
 
+def doc_blocks(starts: np.ndarray, total: int, target: int) -> np.ndarray:
+    """Doc-aligned block bounds over a flat buffer of `total` items laid
+    out by per-doc start offsets: block i starts at the doc holding item
+    i * target. A doc is never split, so a block exceeds the target only
+    by its last doc. Returns sorted doc indices from 0 to len(starts)."""
+    return np.unique(np.concatenate([
+        [0],
+        np.searchsorted(starts, np.arange(target, total, target),
+                        side="right") - 1,
+        [len(starts)]]))
+
+
 def unique_per_doc(sh_flat: np.ndarray, sh_starts: np.ndarray
                    ) -> tuple[np.ndarray, np.ndarray]:
-    """Sorted-unique shingles per doc segment, fully vectorized:
-    lexsort on (shingle, doc) then drop adjacent duplicates."""
+    """Sorted-unique shingles per doc segment, fully vectorized: sort by
+    value, then stable-sort that order by doc id, then drop adjacent
+    duplicates. Doc ids take the narrowest unsigned dtype that holds
+    them: up to 65,536 docs that is 16 bits or less, which numpy's
+    stable sort orders by radix sort."""
     ndocs = len(sh_starts)
     total = len(sh_flat)
     lens = np.empty(ndocs, dtype=np.int64)
     lens[:-1] = sh_starts[1:] - sh_starts[:-1]
     lens[-1] = total - sh_starts[-1]
-    doc_of = np.repeat(np.arange(ndocs, dtype=np.int64), lens)
-    order = np.lexsort((sh_flat, doc_of))
+    doc_of = np.repeat(
+        np.arange(ndocs, dtype=np.min_scalar_type(max(ndocs - 1, 0))), lens)
+    order = np.argsort(sh_flat)
+    order = order[np.argsort(doc_of[order], kind="stable")]
     sd = doc_of[order]
     sv = sh_flat[order]
     keep = np.empty(total, dtype=bool)
     keep[0] = True
     np.logical_or(sd[1:] != sd[:-1], sv[1:] != sv[:-1], out=keep[1:])
     out = sv[keep]
-    out_docs = sd[keep]
-    out_lens = np.bincount(out_docs, minlength=ndocs)
+    out_lens = np.bincount(sd[keep], minlength=ndocs)
     out_starts = np.zeros(ndocs, dtype=np.int64)
     np.cumsum(out_lens[:-1], out=out_starts[1:])
     return out, out_starts

@@ -2,11 +2,15 @@
 -> band signatures, numpy-vectorized over batches of documents.
 
 This is the single compute-dense component of the engine. It runs inside
-the mapInArrow UDFs of functions/udfs.py — no per-row Python in the hot
-path beyond tokenization itself, and all shingling/hashing/permutation
-math is vectorized across the flat concatenated tokens of a whole batch
-(np.minimum.reduceat over document boundaries). `doc_shingles` is the
-per-doc scalar reference the batch path is tested against.
+the mapInArrow UDFs of functions/udfs.py. Per document, Python only
+cleans the text with C-speed str methods; everything after that is
+numpy over the whole batch: `tokenize_batch` joins the cleaned docs
+into one UTF-8 buffer, finds token bounds with a byte mask and hashes
+every token with the batch xxHash64 (xxhash.xxhash64_tokens); shingling
+and permutation math run over the flat concatenated tokens
+(np.minimum.reduceat over document boundaries). `tokenize` and
+`doc_shingles` are the per-doc scalar reference the batch path is
+tested against.
 
 Semantics mirror the reference phase-2 `process_path`
 (/root/reference/src/main.rs:489-679); divergences are deliberate and
@@ -21,6 +25,7 @@ from dataclasses import dataclass
 import numpy as np
 
 from minhash_rs_spark.functions import hashing as H
+from minhash_rs_spark.functions.xxhash import xxhash64, xxhash64_tokens
 
 U64 = np.uint64
 
@@ -57,7 +62,7 @@ def clean_text(text: str) -> str:
     return _WS_RE.sub(" ", t).strip()
 
 
-def tokenize(cleaned: str, mode: str, cache: dict | None = None) -> np.ndarray:
+def tokenize(cleaned: str, mode: str) -> np.ndarray:
     """Token-hash sequence (u64) for cleaned text.
 
     Modes (ref: OmniTokenizer /root/reference/src/main.rs:327-366):
@@ -100,18 +105,8 @@ def tokenize(cleaned: str, mode: str, cache: dict | None = None) -> np.ndarray:
         # xxhash64(), so the JVM tokenization path (doc_assembly.
         # assemble_token_docs, codegen) and this Python path produce
         # identical token ids (parity tested in tests/test_kernel.py)
-        from minhash_rs_spark.functions.xxhash import xxhash64
-        if cache is None:
-            return np.fromiter((xxhash64(w) for w in toks), dtype=U64,
-                               count=len(toks))
-        out = np.empty(len(toks), dtype=U64)
-        for i, w in enumerate(toks):
-            h = cache.get(w)
-            if h is None:
-                h = xxhash64(w)
-                cache[w] = h
-            out[i] = h
-        return out
+        return np.fromiter((xxhash64(w) for w in toks), dtype=U64,
+                           count=len(toks))
     if mode == "bytes":
         return np.frombuffer(cleaned.encode("utf-8"), dtype=np.uint8).astype(U64)
     if mode in ("p50k", "cl100k"):
@@ -127,16 +122,143 @@ def tokenize(cleaned: str, mode: str, cache: dict | None = None) -> np.ndarray:
     raise ValueError(f"unknown tokenizer mode {mode!r}")
 
 
-def doc_shingles(text: str, ngram_size: int, mode: str = "words",
-                 cache: dict | None = None) -> np.ndarray:
+def doc_shingles(text: str, ngram_size: int, mode: str = "words") -> np.ndarray:
     """Unique, sorted u64 shingle ids for one document.
 
     Uniqueness does not change MinHash (min over a set) and is exactly
     what exact-Jaccard verification needs (ref set-variant:
     /root/reference/src/main.rs:563-576).
     """
-    toks = tokenize(clean_text(text), mode, cache)
+    toks = tokenize(clean_text(text), mode)
     return np.unique(H.rolling_poly_hashes(toks, ngram_size))
+
+
+# ---- batch tokenizer (words / uniseg / bytes) ----
+#
+# _clean_for_split leaves each document as tokens separated by ASCII
+# whitespace (a word boundary) or _SOFT (a CJK split inside one word).
+# _SOFT is a C0 byte: _C0_STRIP guarantees none survives cleaning, so it
+# cannot collide with payload.
+_SOFT = "\x01"
+_WS_BYTES = np.zeros(256, dtype=bool)
+_WS_BYTES[[9, 10, 11, 12, 13, 32]] = True
+_SEP_BYTES = _WS_BYTES.copy()
+_SEP_BYTES[ord(_SOFT)] = True
+_SPACE_HASH = U64(xxhash64(" "))   # uniseg's token between adjacent words
+# Bytes of joined text tokenized per block: the per-token int64 arrays
+# of one block (~45k tokens) stay cache-sized and no worker holds a
+# whole batch's worth at once.
+_TOKEN_BLOCK = 1 << 18
+
+
+def _clean_for_split(text: str) -> str:
+    """clean_text's token boundaries at C speed. After lowercasing and
+    stripping, an ASCII doc holds no CJK character and no non-ASCII
+    whitespace, so it is returned as is: runs of ASCII whitespace split
+    it exactly like the collapse would. Only a non-ASCII doc pays for the
+    Unicode whitespace collapse (str.split() splits on exactly the set
+    regex \\s matches) and for the CJK split, marked with _SOFT."""
+    t = text.lower().translate(_PUNCT_TABLE)
+    if t.isascii():
+        return t
+    t = " ".join(t.split())
+    if _CJK_SPLIT_RE.search(t):
+        t = (_CJK_SPLIT_RE.sub(_SOFT + r"\1" + _SOFT, t)
+             .replace(_SOFT + " ", " ").replace(" " + _SOFT, " "))
+    return t
+
+
+def _clean_bytes(text: str) -> str:
+    """clean_text exactly: str.split() splits and trims on the same
+    characters regex \\s matches."""
+    return " ".join(text.lower().translate(_PUNCT_TABLE).split())
+
+
+def _hash_tokens(buf: np.ndarray, doc_starts: np.ndarray, uniseg: bool
+                 ) -> tuple[np.ndarray, np.ndarray]:
+    """(u64 token hashes, per-doc token counts) of one block of joined
+    docs (buf: uint8, doc_starts: each doc's first byte in buf). Tokens
+    are the maximal runs of non-separator bytes; uniseg puts
+    _SPACE_HASH before every token that follows its doc's previous token
+    across whitespace (not across a _SOFT CJK split)."""
+    word = (~_SEP_BYTES[buf]).view(np.int8)
+    # nonzero edges alternate token start (+1), token end (-1)
+    edges = np.flatnonzero(np.diff(word, prepend=np.int8(0),
+                                   append=np.int8(0)))
+    t_start = edges[0::2]
+    t_len = edges[1::2] - t_start
+    h = xxhash64_tokens(buf, t_start, t_len)
+    first = np.searchsorted(t_start, doc_starts)   # doc -> its first token
+    counts = np.diff(first, append=len(t_start))
+    if not uniseg or not len(h):
+        return h, counts
+    space = _WS_BYTES[buf[t_start - 1]]
+    space[first[counts > 0]] = False
+    # shift[i + 1]: spaces inserted up to and including token i; a
+    # doc's first token takes none, so shift[first] places each doc
+    shift = np.zeros(len(h) + 1, dtype=np.int64)
+    np.cumsum(space, out=shift[1:])
+    out = np.full(len(h) + int(shift[-1]), _SPACE_HASH, dtype=U64)
+    out[np.arange(len(h)) + shift[1:]] = h
+    return out, np.diff(first + shift[first], append=len(out))
+
+
+def tokenize_batch(texts, mode: str
+                   ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Token hashes of a batch of documents, equal per doc to
+    `tokenize(clean_text(t), mode)`: (flat u64 values, int64 doc start
+    offsets, bool `ok`) — the input of the flat shingler
+    (hashing.rolling_poly_from_flat). A NULL text is the empty doc. A
+    doc whose cleaning raises gets ok=False and no tokens (P7 failure
+    guard, ref catch_unwind src/main.rs:522-526): callers drop it and it
+    survives downstream as a singleton. Config errors (ValueError,
+    NotImplementedError) raise.
+
+    words/uniseg/bytes: each doc is cleaned with str methods, the batch
+    is joined and UTF-8-encoded once, and token bounds and hashes are
+    numpy over doc-aligned blocks of _TOKEN_BLOCK bytes. BPE modes
+    tokenize per doc."""
+    n = len(texts)
+    ok = np.ones(n, dtype=bool)
+    per_doc = mode not in ("words", "uniseg", "bytes")
+    if mode == "bytes":
+        prep = _clean_bytes
+    elif not per_doc:
+        prep = _clean_for_split
+    else:  # BPE; tokenize rejects an unknown mode
+        def prep(t):
+            return tokenize(clean_text(t), mode)
+    docs = []
+    for i, t in enumerate(texts):
+        try:
+            docs.append(prep(t if t is not None else ""))
+        except (ValueError, NotImplementedError):
+            raise  # config errors must fail the job, not skip docs
+        except Exception:
+            ok[i] = False
+            docs.append(np.empty(0, dtype=U64) if per_doc else "")
+    if per_doc:
+        return (*flatten_docs(docs), ok)
+    nbytes = np.fromiter((len(d) if d.isascii() else len(d.encode("utf-8"))
+                          for d in docs), dtype=np.int64, count=n)
+    sep = 0 if mode == "bytes" else 1
+    starts = np.zeros(n, dtype=np.int64)   # doc -> first byte in buf
+    np.cumsum(nbytes[:-1] + sep, out=starts[1:])
+    buf = np.frombuffer((" " * sep).join(docs).encode("utf-8"),
+                        dtype=np.uint8)
+    if mode == "bytes":
+        return buf.astype(U64), starts, ok
+    bounds = H.doc_blocks(starts, len(buf), _TOKEN_BLOCK)
+    hashes, counts = [np.empty(0, dtype=U64)], [np.empty(0, dtype=np.int64)]
+    for d0, d1 in zip(bounds[:-1], bounds[1:]):
+        b0, b1 = starts[d0], starts[d1 - 1] + nbytes[d1 - 1]
+        h, c = _hash_tokens(buf[b0:b1], starts[d0:d1] - b0, mode == "uniseg")
+        hashes.append(h)
+        counts.append(c)
+    counts = np.concatenate(counts)
+    tok_starts = np.zeros(n, dtype=np.int64)
+    np.cumsum(counts[:-1], out=tok_starts[1:])
+    return np.concatenate(hashes), tok_starts, ok
 
 
 def flatten_docs(arrays: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
@@ -165,26 +287,6 @@ class SignatureKernel:
         perm_seeds = H.expand_perm_seeds(band_seeds, self.band_size)
         self.a_hi, self.a_lo = H.init_permutations(perm_seeds)
         self.num_perms = self.num_bands * self.band_size
-
-    # ---- tokenization ----
-
-    def shingles_batch(self, texts) -> list[np.ndarray | None]:
-        """Per-doc token-hash arrays — the input of the flat shingler
-        (hashing.rolling_poly_from_flat). A doc whose tokenization raises
-        yields None (P7 failure guard, ref catch_unwind
-        src/main.rs:522-526) — callers drop it and it survives
-        downstream as a singleton."""
-        cache: dict = {}
-        out: list[np.ndarray | None] = []
-        for t in texts:
-            try:
-                out.append(tokenize(clean_text(t if t is not None else ""),
-                                    self.tokenizer, cache))
-            except (ValueError, NotImplementedError):
-                raise  # config errors must fail the job, not skip docs
-            except Exception:
-                out.append(None)
-        return out
 
     # ---- minhash ----
 
@@ -244,7 +346,7 @@ class SignatureKernel:
                  for t in texts), dtype=U64, count=len(texts))
             hv = np.repeat(doc_h[:, None], self.num_perms, axis=1)
             return H.band_signatures(hv, self.num_bands, self.band_size)
-        flat, starts = flatten_docs(self.shingles_batch(texts))
+        flat, starts, _ = tokenize_batch(texts, self.tokenizer)
         return self.band_sigs_from_flat(
             *H.rolling_poly_from_flat(flat, starts, self.ngram_size))
 

@@ -1,16 +1,21 @@
 """Arrow-batched Spark UDFs wrapping the numpy kernel.
 
 Exactly the UDF surface SURVEY.md §2.7 calls for — every UDF is one
-mapInArrow over flat buffers, no per-row Python beyond tokenization:
+mapInArrow over flat buffers; the only per-row Python is the C-speed
+str cleaning of each text (kernel.tokenize_batch), after which token
+bounds, token hashes, shingles and dedup are whole-batch numpy:
 
   shingle_sets(...)        text -> sorted-unique u64 shingle ids (P1-P3)
+                           — batch tokenizer, rolling shingles, radix-
+                           sorted dedup
   band_signature_rows(...) shingles -> exploded (band_id, sig_hi, sig_lo)
                            rows (H1-H5), explosion done batch-side in
                            numpy (np.repeat/tile), not via Spark explode
   with_jaccard(df, a, b)   exact Jaccard of two shingle-array columns
                            (J6) — batch lexsort + adjacent-dup count
   with_simhash(df, col)    64-bit SimHash of a shingle-array column
-                           (north rule) — batch unpackbits + reduceat
+                           (north rule) — per-block byte histogram x
+                           bit table
 
 Every shingle and signature UDF reads and writes the same layout: one
 flat u64 value buffer + per-doc start offsets (the Arrow ListArray
@@ -34,7 +39,7 @@ from pyspark.sql import types as T
 
 from minhash_rs_spark.config import MinHashConfig
 from minhash_rs_spark.functions import hashing as H
-from minhash_rs_spark.functions.kernel import SignatureKernel, flatten_docs
+from minhash_rs_spark.functions.kernel import SignatureKernel, tokenize_batch
 
 SHINGLES_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType(), False),
@@ -70,10 +75,11 @@ def _list_flat(lst):
 
 def _shingle_batch(conv, flat, starts, ngram: int) -> "pa.RecordBatch":
     """(conv_id, shingles, n_shingles) batch from a flat token-hash
-    buffer: batch rolling shingles, then a lexsort dedup per doc — the
-    sorted-unique sets exact-Jaccard verification needs. The list column
-    is assembled from one flat buffer + offsets; no per-doc Python
-    objects cross the Arrow boundary.
+    buffer: batch rolling shingles, then a radix-sorted dedup per doc
+    (hashing.unique_per_doc) — the sorted-unique sets exact-Jaccard
+    verification needs. The list column is assembled from one flat
+    buffer + offsets; no per-doc Python objects cross the Arrow
+    boundary.
 
     max_shingles_per_doc is NOT applied here — MinHash signatures are
     cap-invariant on every tokenizer path; the cap bounds only the
@@ -113,28 +119,29 @@ def shingle_sets(docs: DataFrame, cfg: MinHashConfig,
     the exact-Jaccard verification stage (the reference re-tokenizes in
     its true-jacc pass, src/main.rs:563-576 — we don't).
 
-    Only tokenization touches Python strings; the per-doc token arrays
-    are concatenated once per batch and shingled by _shingle_batch.
+    Only cleaning touches Python strings: kernel.tokenize_batch hashes
+    the whole batch's tokens into one flat buffer, which _shingle_batch
+    shingles.
     """
 
     def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        kernel = _kernel(cfg)
         for rb in batches:
             if rb.num_rows == 0:
                 continue
             conv = rb.column(0)
-            toks = kernel.shingles_batch(rb.column(1).to_pylist())
+            flat, starts, ok = tokenize_batch(rb.column(1).to_pylist(),
+                                              cfg.tokenizer)
             # P7 tokenization-failure guard (ref catch_unwind,
             # src/main.rs:522-526): a doc whose tokenization raised is
             # dropped here -> no signatures -> it survives as a singleton,
-            # matching the reference's skip-and-continue
-            keep = [t is not None for t in toks]
-            if not all(keep):
-                conv = conv.filter(pa.array(keep))
-                toks = [t for t in toks if t is not None]
-                if not toks:
+            # matching the reference's skip-and-continue. It holds no
+            # tokens, so dropping its start offset drops it from flat.
+            if not ok.all():
+                conv = conv.filter(pa.array(ok))
+                starts = starts[ok]
+                if not len(starts):
                     continue
-            yield _shingle_batch(conv, *flatten_docs(toks), cfg.ngram_size)
+            yield _shingle_batch(conv, flat, starts, cfg.ngram_size)
 
     return docs.select("conv_id", text_col).mapInArrow(fn, SHINGLES_SCHEMA)
 
@@ -285,11 +292,17 @@ def with_jaccard(df: DataFrame, a_col: str, b_col: str,
     return df.mapInArrow(fn, out_schema)
 
 
-# Shingles per unpackbits block in _simhash_flat. The bit matrix costs
-# 64 bytes per shingle: a whole Arrow batch (thousands of transcripts,
-# millions of shingles) unpacked at once is a ~150 MB transient per
-# Python worker; a block keeps it at ~4 MB.
+# Values per block of _simhash_flat, and docs per block: a block's vote
+# histogram holds one count per (doc, byte position, byte value) — 16 KB
+# per doc — and its bincount keys one int64 per byte of its values, so
+# both stay ~4 MB per Python worker instead of scaling with a whole
+# Arrow batch (thousands of transcripts, millions of shingles).
 _SIMHASH_BLOCK = 1 << 16
+_SIMHASH_BLOCK_DOCS = 256
+# row v: the 8 bits of byte value v, most significant first — the
+# np.unpackbits bit order, so the vote's bit layout is unpackbits'
+_BYTE_BITS = np.unpackbits(np.arange(256, dtype=np.uint8)[:, None],
+                           axis=1).astype(np.float64)
 
 
 def _simhash_flat(flat: np.ndarray, starts: np.ndarray,
@@ -297,31 +310,28 @@ def _simhash_flat(flat: np.ndarray, starts: np.ndarray,
     """u64 SimHash per doc of a flat u64 value buffer (per-bit majority
     vote, ties set the bit; an empty doc hashes to 0).
 
-    Docs are taken in runs of about _SIMHASH_BLOCK values; a doc is
-    never split, so a block exceeds the target only by its last doc."""
+    Per block, one bincount over (doc, byte position, byte value) counts
+    each doc's byte values; a product with the 256 x 8 bit table turns
+    the counts into per-bit votes (float64 is exact for any count below
+    2^53). Docs are taken in runs of about _SIMHASH_BLOCK values and at
+    most _SIMHASH_BLOCK_DOCS docs; a doc is never split, so a block
+    exceeds the value target only by its last doc."""
     n = len(starts)
     sums = np.zeros((n, 64), dtype=np.int64)
-    # block i starts at the doc holding value i * _SIMHASH_BLOCK
-    bounds = np.unique(np.concatenate([
-        [0],
-        np.searchsorted(starts, np.arange(_SIMHASH_BLOCK, len(flat),
-                                          _SIMHASH_BLOCK), side="right") - 1,
-        [n]]))
+    bounds = np.union1d(H.doc_blocks(starts, len(flat), _SIMHASH_BLOCK),
+                        np.arange(0, n, _SIMHASH_BLOCK_DOCS))
     for d0, d1 in zip(bounds[:-1], bounds[1:]):
-        nz = lens[d0:d1] > 0
-        if not nz.any():
-            continue
         v0 = starts[d0]
         v1 = starts[d1] if d1 < n else len(flat)
-        # bits: (values, 64) 0/1; little-endian byte order within each
-        # u64 — consistent across rows, so the vote per bit position is
-        # well-defined
-        bits = np.unpackbits(flat[v0:v1].view(np.uint8)).reshape(-1, 64)
-        # segment only over non-empty rows: their starts are strictly
-        # increasing, in-bounds, and contiguous (empty rows contribute no
-        # values), which is exactly what reduceat requires
-        sums[d0:d1][nz] = np.add.reduceat(bits, starts[d0:d1][nz] - v0,
-                                          axis=0)
+        if v0 == v1:
+            continue
+        # key = (doc in block, byte position) * 256 + byte value, for the
+        # 8 little-endian bytes of each value
+        doc = np.repeat(np.arange(0, 8 * (d1 - d0), 8), lens[d0:d1])
+        key = (doc[:, None] + np.arange(8)) << 8
+        key |= flat[v0:v1].view(np.uint8).reshape(-1, 8)
+        hist = np.bincount(key.reshape(-1), minlength=(d1 - d0) * 2048)
+        sums[d0:d1] = (hist.reshape(-1, 256) @ _BYTE_BITS).reshape(-1, 64)
     votes = (sums * 2 >= lens[:, None]) & (lens > 0)[:, None]
     return np.packbits(votes.astype(np.uint8),
                        axis=1).view(np.uint64).reshape(-1)
@@ -331,8 +341,9 @@ def with_simhash(df: DataFrame, shingles_col: str = "shingles",
                  out_col: str = "simhash") -> DataFrame:
     """Append the 64-bit SimHash (per-bit majority vote over the
     already-uniform shingle hashes; ties set the bit) and drop the
-    shingle column. Batch-vectorized (_simhash_flat): unpackbits over
-    the flat value buffer + segmented sums via add.reduceat — no
+    shingle column. Batch-vectorized (_simhash_flat): per block of the
+    flat value buffer, one bincount of (doc, byte position, byte value)
+    times a 256 x 8 bit table gives every doc's 64 bit votes — no
     per-row Python. North-rule addition, no reference counterpart."""
     keep = [f for f in df.schema.fields if f.name != shingles_col]
     out_schema = T.StructType(keep + [T.StructField(out_col,

@@ -42,7 +42,8 @@ def cluster_assignments(docs: DataFrame, cc: DataFrame,
         buffers a whole component.
     Both plans give the same rows in the same column order.
 
-    n_docs_hint is accepted and ignored: existing callers still pass it.
+    n_docs_hint is accepted and ignored: perfbench/workloads.py still
+    passes it.
     """
     labeled = (docs.select("conv_id")
                .join(cc, "conv_id", "left")

@@ -110,17 +110,13 @@ def config_fingerprint(cfg: MinHashConfig, input_token: str = "") -> str:
 def run_minhash(spark: SparkSession, turns: DataFrame,
                 cfg: MinHashConfig | None = None,
                 input_token: str = "",
-                upto: str | None = None,
-                n_docs_hint: int | None = None) -> PipelineResult:
+                upto: str | None = None) -> PipelineResult:
     """upto: stop after materializing the named checkpoint stage
     (one of UPTO_STAGES) — the Spark analog of the reference\'s granular
     phase subcommands (hash-only/gather-edges/build-uf, README.md:84-91
     of the reference); requires cfg.checkpoint_dir so later phases
     resume from the committed tables. Downstream fields of the result
-    are None. Any other name raises ValueError.
-
-    n_docs_hint is accepted and ignored: existing callers still pass it
-    (cluster_assignments sizes its cc_idx plan from the cc table)."""
+    are None. Any other name raises ValueError."""
     if upto is not None and upto not in UPTO_STAGES:
         raise ValueError(f"upto={upto!r}: expected one of "
                          f"{', '.join(UPTO_STAGES)}")

@@ -134,36 +134,116 @@ def test_xxhash64_matches_known_vectors():
     assert xxhash64_signed("hello") == -4367754540140381902
 
 
-def test_flat_rolling_and_unique_match_per_doc():
-    rng = np.random.default_rng(3)
-    docs = [rng.integers(0, 2 ** 63, rng.integers(0, 25)).astype(np.uint64)
-            for _ in range(100)]
-    starts = np.zeros(len(docs), dtype=np.int64)
-    lens = np.array([len(d) for d in docs])
+def test_xxhash64_tokens_matches_scalar():
+    """The batch xxHash64 (every token of one byte buffer at once) ==
+    the scalar spec on random byte strings of every length 0..100 —
+    all tail arms and 0-3 stripes — laid out back to back, and on the
+    two captured Spark vectors."""
+    from minhash_rs_spark.functions.xxhash import xxhash64, xxhash64_tokens
+
+    rng = np.random.default_rng(5)
+    words = [b"", b"hello"] + [rng.integers(0, 256, n, dtype=np.uint8)
+                               .tobytes() for n in range(101)
+                               for _ in range(2)]
+    lens = np.array([len(w) for w in words], dtype=np.int64)
+    starts = np.zeros(len(words), dtype=np.int64)
     np.cumsum(lens[:-1], out=starts[1:])
-    flat = np.concatenate(docs)
-    sh_flat, sh_starts = H.rolling_poly_from_flat(flat, starts, 5)
-    ends = np.concatenate([sh_starts[1:], [len(sh_flat)]])
-    u_flat, u_starts = H.unique_per_doc(sh_flat, sh_starts)
-    uends = np.concatenate([u_starts[1:], [len(u_flat)]])
-    for i, d in enumerate(docs):
-        assert np.array_equal(sh_flat[sh_starts[i]:ends[i]],
-                              H.rolling_poly_hashes(d, 5))
-        assert np.array_equal(u_flat[u_starts[i]:uends[i]],
-                              np.unique(H.rolling_poly_hashes(d, 5)))
+    buf = np.frombuffer(b"".join(words), dtype=np.uint8)
+    got = xxhash64_tokens(buf, starts, lens)
+    assert [int(h) for h in got] == [xxhash64(w) for w in words]
+    assert got[:2].view(np.int64).tolist() == [-7444071767201028348,
+                                               -4367754540140381902]
 
 
-# TEXTS plus a NULL doc; "short", "" and "a b c d" are shorter than the
-# default ngram_size (5), so the short-doc fallback is exercised
-_DOCS = [(f"d{i}", t) for i, t in enumerate(TEXTS)] + [("dnull", None)]
+def test_flat_rolling_and_unique_match_per_doc():
+    """Batch rolling shingles and per-doc dedup == per-doc scalar, on
+    100 random docs and on 70,000 tiny docs over a 3-token alphabet
+    (repeated shingles; doc ids too wide for 16 bits)."""
+    rng = np.random.default_rng(3)
+    inputs = [
+        [rng.integers(0, 2 ** 63, rng.integers(0, 25)).astype(np.uint64)
+         for _ in range(100)],
+        [rng.integers(0, 3, rng.integers(0, 9)).astype(np.uint64)
+         for _ in range(70_000)],
+    ]
+    for docs in inputs:
+        starts = np.zeros(len(docs), dtype=np.int64)
+        lens = np.array([len(d) for d in docs])
+        np.cumsum(lens[:-1], out=starts[1:])
+        flat = np.concatenate(docs)
+        sh_flat, sh_starts = H.rolling_poly_from_flat(flat, starts, 5)
+        ends = np.concatenate([sh_starts[1:], [len(sh_flat)]])
+        u_flat, u_starts = H.unique_per_doc(sh_flat, sh_starts)
+        uends = np.concatenate([u_starts[1:], [len(u_flat)]])
+        for i, d in enumerate(docs):
+            assert np.array_equal(sh_flat[sh_starts[i]:ends[i]],
+                                  H.rolling_poly_hashes(d, 5))
+            assert np.array_equal(u_flat[u_starts[i]:uends[i]],
+                                  np.unique(H.rolling_poly_hashes(d, 5)))
 
 
-@pytest.mark.parametrize("mode", ["words", "bytes"])
+# What the batch tokenizer's cleaning shortcuts must get right: Unicode
+# whitespace (collapsed only for non-ASCII docs), case mappings that
+# change length or leave ASCII (İ -> i + U+0307, Kelvin sign -> k),
+# CJK/kana/hangul glued to Latin (split per character; uniseg puts no
+# space token between the pieces of one word), stripped C0 controls and
+# DEL, tokens around the 8/32-byte hash boundaries (some multibyte
+# UTF-8 straddling 8-byte chunks) and a whitespace-only doc.
+ADVERSARIAL = [
+    "nbsp\u00a0nel\u0085em\u2003ls\u2028ideo\u3000end",
+    "\u00a0 lead and trail \u3000",
+    "İSTANBUL İi straße STRASSE ß \u212a",
+    "abc日本def かなカナ한국어 text 日 本 漢字",
+    "x日 本y 日本語のテスト",
+    "c0\x01ctl\x1cfs\x1dgs\x1ers\x1fus\x7fdel \x1f",
+    " ".join(("abcdefghijklmnopqrstuvwxyz0123456789" * 2)[:k]
+             for k in (7, 8, 9, 31, 32, 33, 64)),
+    "ééé日x ééééa " + "é" * 16 + " a" + "é" * 4 + " " + "ü" * 20 + "x",
+    " \t\n\u00a0\u3000 ",
+]
+
+# TEXTS, ADVERSARIAL and a NULL doc; "short", "" and "a b c d" are
+# shorter than the default ngram_size (5), so the short-doc fallback
+# is exercised
+_DOCS = ([(f"d{i}", t) for i, t in enumerate(TEXTS + ADVERSARIAL)]
+         + [("dnull", None)])
+
+
+@pytest.mark.parametrize("mode", ["words", "uniseg", "bytes"])
+def test_tokenize_batch_matches_scalar_reference(mode):
+    """kernel.tokenize_batch (one joined buffer, byte-mask token bounds,
+    batch xxHash64) == per-doc tokenize(clean_text(t), mode), with the
+    docs in a batch in either order and alone."""
+    from minhash_rs_spark.functions.kernel import tokenize_batch
+
+    texts = [t for _, t in _DOCS]
+    for batch in [texts, texts[::-1]] + [[t] for t in texts]:
+        flat, starts, ok = tokenize_batch(batch, mode)
+        assert ok.all()
+        ends = np.append(starts[1:], len(flat))
+        for t, s, e in zip(batch, starts, ends):
+            want = tokenize(clean_text(t if t is not None else ""), mode)
+            assert np.array_equal(flat[s:e], want), (mode, t)
+
+
+def test_batch_cleaner_whitespace_is_regex_whitespace():
+    """The batch cleaner collapses whitespace with str.split(); the
+    reference clean_text with regex \\s. They agree on every code
+    point."""
+    import re
+
+    ws = re.compile(r"\s")
+    assert all((ws.fullmatch(c) is not None) == c.isspace()
+               for c in map(chr, range(0x110000)))
+
+
+@pytest.mark.parametrize("mode", ["words", "uniseg", "bytes"])
 def test_shingle_sets_match_scalar_reference(spark, mode):
-    """The Python tokenizer path (udfs.shingle_sets: per-doc tokens ->
-    one flat batch -> rolling shingles -> lexsort dedup) equals the
-    per-doc scalar reference kernel.doc_shingles on every doc, including
-    a doc shorter than ngram_size, an empty doc and a NULL doc."""
+    """The Python tokenizer path (udfs.shingle_sets: batch tokenizer ->
+    one flat token buffer -> rolling shingles -> radix-sorted dedup)
+    equals the per-doc scalar reference kernel.doc_shingles on every
+    doc, including a doc shorter than ngram_size, an empty doc, a NULL
+    doc and the ADVERSARIAL docs."""
     from minhash_rs_spark.config import MinHashConfig
     from minhash_rs_spark.functions.udfs import shingle_sets
 
@@ -227,7 +307,8 @@ def test_with_jaccard_matches_scalar_kernel(spark):
 
 
 def test_with_simhash_matches_rowwise(spark):
-    """Vectorized simhash (reduceat) == per-row unpackbits majority vote."""
+    """Vectorized simhash (byte-histogram vote) == per-row unpackbits
+    majority vote."""
     import numpy as np
 
     from minhash_rs_spark.functions.udfs import with_simhash
@@ -254,22 +335,27 @@ def test_with_simhash_matches_rowwise(spark):
 
 
 def test_simhash_blocks_match_whole_batch(monkeypatch):
-    """_simhash_flat over blocks of a few values (docs longer than a
-    block, runs of empty docs at the ends and inside) == the per-doc
-    majority vote."""
+    """_simhash_flat over blocks of a few values and a few docs (docs
+    longer than a block, runs of empty docs at the ends and inside, one
+    doc of 300 identical values — more votes than an 8-bit counter
+    holds) == the per-doc majority vote."""
     import numpy as np
 
     from minhash_rs_spark.functions import udfs
 
     monkeypatch.setattr(udfs, "_SIMHASH_BLOCK", 7)
+    monkeypatch.setattr(udfs, "_SIMHASH_BLOCK_DOCS", 5)
     rng = np.random.RandomState(11)
     lens = rng.randint(0, 20, size=200).astype(np.int64)
     lens[rng.rand(200) < 0.25] = 0
     lens[:3] = lens[-3:] = 0
+    lens[100] = 300
     starts = np.zeros(len(lens), dtype=np.int64)
     np.cumsum(lens[:-1], out=starts[1:])
     flat = rng.randint(-2**62, 2**62, size=lens.sum()).view(np.uint64)
+    flat[starts[100]:starts[100] + 300] = flat[starts[100]]
     got = udfs._simhash_flat(flat, starts, lens)
+    assert got[100] == flat[starts[100]]
     for i, (s, n) in enumerate(zip(starts, lens)):
         want = 0
         if n:

@@ -56,19 +56,28 @@ def test_jsonl_reader_concat_key_runs(spark, jsonl_dir):
 
 def test_tokenization_failure_guard_kernel():
     """P7 (ref catch_unwind src/main.rs:522-526): a doc that explodes in
-    tokenization yields None and is skipped; config errors still raise."""
-    from minhash_rs_spark.functions.kernel import SignatureKernel
+    tokenization is flagged not-ok with no tokens, so callers skip it;
+    its neighbours keep theirs; config errors still raise."""
+    from minhash_rs_spark.functions.kernel import (
+        clean_text,
+        tokenize,
+        tokenize_batch,
+    )
 
     class Bomb(str):
         def lower(self):
             raise RuntimeError("boom")
 
-    k = SignatureKernel()
-    out = k.shingles_batch(["fine text here", Bomb("x"), "also fine"])
-    assert out[0] is not None and out[2] is not None
-    assert out[1] is None
+    flat, starts, ok = tokenize_batch(
+        ["fine text here", Bomb("x"), "also fine"], "words")
+    assert ok.tolist() == [True, False, True]
+    ends = np.append(starts[1:], len(flat))
+    assert starts[1] == ends[1]
+    for i, t in [(0, "fine text here"), (2, "also fine")]:
+        assert np.array_equal(flat[starts[i]:ends[i]],
+                              tokenize(clean_text(t), "words"))
     with pytest.raises(ValueError):
-        SignatureKernel(tokenizer="nope").shingles_batch(["x"])
+        tokenize_batch(["x"], "nope")
 
 
 def test_word_jaccard_operator(spark):
