@@ -259,22 +259,36 @@ def doc_blocks(starts: np.ndarray, total: int, target: int) -> np.ndarray:
         [len(starts)]]))
 
 
+def doc_ids(lens: np.ndarray, ndocs: int) -> np.ndarray:
+    """Doc id of every item of a flat buffer laid out by per-doc
+    lengths, as the narrowest unsigned dtype that holds ndocs - 1: up
+    to 65,536 docs that is 16 bits or less, which numpy's stable sort
+    orders by radix sort."""
+    return np.repeat(
+        np.arange(ndocs, dtype=np.min_scalar_type(max(ndocs - 1, 0))), lens)
+
+
+def two_key_order(major: np.ndarray, minor: np.ndarray) -> np.ndarray:
+    """Permutation that sorts records by (major, minor): argsort the
+    minor key, then stable-argsort that order by the major key. With
+    narrow unsigned major keys (doc_ids) the stable pass is a radix
+    sort. Records equal on both keys come out in no fixed order."""
+    order = np.argsort(minor)
+    return order[np.argsort(major[order], kind="stable")]
+
+
 def unique_per_doc(sh_flat: np.ndarray, sh_starts: np.ndarray
                    ) -> tuple[np.ndarray, np.ndarray]:
-    """Sorted-unique shingles per doc segment, fully vectorized: sort by
-    value, then stable-sort that order by doc id, then drop adjacent
-    duplicates. Doc ids take the narrowest unsigned dtype that holds
-    them: up to 65,536 docs that is 16 bits or less, which numpy's
-    stable sort orders by radix sort."""
+    """Sorted-unique shingles per doc segment, fully vectorized: sort
+    (doc, value) records (two_key_order), then drop adjacent
+    duplicates."""
     ndocs = len(sh_starts)
     total = len(sh_flat)
     lens = np.empty(ndocs, dtype=np.int64)
     lens[:-1] = sh_starts[1:] - sh_starts[:-1]
     lens[-1] = total - sh_starts[-1]
-    doc_of = np.repeat(
-        np.arange(ndocs, dtype=np.min_scalar_type(max(ndocs - 1, 0))), lens)
-    order = np.argsort(sh_flat)
-    order = order[np.argsort(doc_of[order], kind="stable")]
+    doc_of = doc_ids(lens, ndocs)
+    order = two_key_order(doc_of, sh_flat)
     sd = doc_of[order]
     sv = sh_flat[order]
     keep = np.empty(total, dtype=bool)

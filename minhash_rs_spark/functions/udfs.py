@@ -12,7 +12,8 @@ bounds, token hashes, shingles and dedup are whole-batch numpy:
                            rows (H1-H5), explosion done batch-side in
                            numpy (np.repeat/tile), not via Spark explode
   with_jaccard(df, a, b)   exact Jaccard of two shingle-array columns
-                           (J6) — batch lexsort + adjacent-dup count
+                           (J6) — batch (row, value) sort + adjacent-
+                           dup count
   with_simhash(df, col)    64-bit SimHash of a shingle-array column
                            (north rule) — per-block byte histogram x
                            bit table
@@ -225,9 +226,9 @@ def _batch_jaccard(a_flat, a_starts, b_flat, b_starts, n):
     """Vectorized per-row exact Jaccard of n (sorted-unique) set pairs
     given as flat value buffers + row starts. No per-row Python: tag
     every value with its row id, sort (row, value) records across BOTH
-    sides at once, and count adjacent duplicates per row — a value
-    appears twice within a row iff it is in the intersection (each
-    side's set has no internal duplicates)."""
+    sides at once (hashing.two_key_order), and count adjacent
+    duplicates per row — a value appears twice within a row iff it is
+    in the intersection (each side's set has no internal duplicates)."""
     a_lens = np.empty(n, dtype=np.int64)
     a_lens[:-1] = a_starts[1:] - a_starts[:-1]
     a_lens[-1] = len(a_flat) - a_starts[-1]
@@ -235,14 +236,12 @@ def _batch_jaccard(a_flat, a_starts, b_flat, b_starts, n):
     b_lens[:-1] = b_starts[1:] - b_starts[:-1]
     b_lens[-1] = len(b_flat) - b_starts[-1]
 
-    rows = np.concatenate([np.repeat(np.arange(n), a_lens),
-                           np.repeat(np.arange(n), b_lens)])
+    rows = np.concatenate([H.doc_ids(a_lens, n), H.doc_ids(b_lens, n)])
     vals = np.concatenate([a_flat, b_flat])
-    order = np.lexsort((vals, rows))
+    order = H.two_key_order(rows, vals)
     rows_s, vals_s = rows[order], vals[order]
     dup = (rows_s[1:] == rows_s[:-1]) & (vals_s[1:] == vals_s[:-1])
-    inter = np.zeros(n, dtype=np.int64)
-    np.add.at(inter, rows_s[1:][dup], 1)
+    inter = np.bincount(rows_s[1:][dup], minlength=n)
     union = a_lens + b_lens - inter
     out = np.zeros(n, dtype=np.float64)
     nz = union > 0

@@ -15,11 +15,11 @@ This module adds that shape on top of the same kernels:
   history never appears as join fan-out.
 - verified (jaccard_threshold set): each old bucket keeps up to
   `old_cap` member ids (deterministic: sorted, first-claimant — the
-  same capped-candidate stance as lsh.pair_edges), candidates pass the
-  exact integer length-ratio prefilter (verify.py semantics), and the
-  surviving pairs are scored by the batch-vectorized exact-Jaccard
-  Arrow kernel. A giant old bucket can truncate candidates past
-  old_cap — documented recall trade, identical in kind to pair_cap.
+  same capped-candidate stance as lsh.pair_edges), and every candidate
+  pair is scored by the batch-vectorized exact-Jaccard Arrow kernel
+  (verify.edges_with_jaccard, batch set vs history set). A giant old
+  bucket can truncate candidates past old_cap — documented recall
+  trade, identical in kind to pair_cap.
 
 New-vs-new duplicates inside the batch are the ordinary pipeline's job
 (run_minhash on the batch); compose both for full append semantics.
@@ -34,10 +34,9 @@ from pyspark.sql import functions as F
 
 from minhash_rs_spark.config import MinHashConfig
 from minhash_rs_spark.functions.fingerprint import fingerprint128
-from minhash_rs_spark.functions.udfs import with_jaccard
+from minhash_rs_spark.operators.verify import edges_with_jaccard
 
 _BUCKET = ["band_id", "sig_hi", "sig_lo"]
-_RATIO_SLACK = 1e-9  # strictly conservative float bound (verify.py)
 
 
 def dup_against_corpus(new_sigs: DataFrame, old_sigs: DataFrame,
@@ -100,26 +99,9 @@ def dup_against_corpus(new_sigs: DataFrame, old_sigs: DataFrame,
                     F.explode("_olds").alias("dst"))
             .groupBy("src", "dst")
             .agg(F.count(F.lit(1)).alias("n_band_hits")))
-    # exact length-ratio prefilter on the two int counts (provable
-    # failures never reach the array joins / kernel — verify.py)
-    nsz = new_shingles.select(F.col("conv_id").alias("src"),
-                              F.size("shingles").alias("_na"))
-    osz = old_shingles.select(F.col("conv_id").alias("dst"),
-                              F.size("shingles").alias("_nb"))
-    cand = (cand.join(nsz, "src").join(osz, "dst")
-            .where(F.least("_na", "_nb").cast("double")
-                   >= F.greatest("_na", "_nb")
-                   * F.lit(float(threshold) - _RATIO_SLACK))
-            .select("src", "dst", "n_band_hits"))
-    joined = (cand
-              .join(new_shingles.select(F.col("conv_id").alias("src"),
-                                        F.col("shingles").alias("sh_src")),
-                    "src")
-              .join(old_shingles.select(F.col("conv_id").alias("dst"),
-                                        F.col("shingles").alias("sh_dst")),
-                    "dst")
-              .select("src", "dst", "n_band_hits", "sh_src", "sh_dst"))
-    scored = (with_jaccard(joined, "sh_src", "sh_dst", "jaccard")
+    # new and old stay separate shingle tables: a conv_id present in
+    # both the batch and history is scored batch-set vs history-set
+    scored = (edges_with_jaccard(cand, new_shingles, old_shingles)
               .where(F.col("jaccard") >= F.lit(float(threshold))))
     # best match per new doc in ONE aggregation — min_by over the
     # ordering struct (-jaccard asc == jaccard desc, then dst asc)

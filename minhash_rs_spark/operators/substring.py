@@ -8,7 +8,8 @@ edges (contained -> container) feed the shared CC/annotate/prune sinks.
 Algorithm, per partition (mapInPandas):
   1. Concatenate the partition's cleaned texts with '\\x00' separators.
   2. Build the suffix array with a numpy prefix-doubling sort
-     (Manber-Myers, O(n log^2 n), fully vectorized via np.lexsort).
+     (Manber-Myers, O(n log^2 n), fully vectorized: one argsort of a
+     combined int64 (rank, next rank) key per round).
   3. A doc's text t (len L>0) occurs somewhere else iff an SA-neighbor of
      the suffix starting at the doc's own offset also has t as prefix
      (the suffixes prefixed by t form a contiguous SA range containing
@@ -69,18 +70,22 @@ def suffix_array(s: np.ndarray) -> np.ndarray:
     """Suffix array of a uint8/int array via prefix doubling.
 
     Returns `order`: positions sorted by suffix. Vectorized: each round
-    lexsorts (rank[i], rank[i+k]) pairs and re-ranks.
+    sorts (rank[i], rank[i+k]) pairs and re-ranks.
     """
     n = len(s)
     if n == 0:
         return np.empty(0, dtype=np.int64)
-    rank = np.asarray(s, dtype=np.int64)
+    # dense-rank the input so every rank lies in [0, n) from round 1
+    rank = np.unique(np.asarray(s), return_inverse=True)[1].astype(np.int64)
     tmp = np.empty(n, dtype=np.int64)
     k = 1
     while True:
         nxt = np.full(n, -1, dtype=np.int64)
         nxt[:n - k] = rank[k:]
-        order = np.lexsort((nxt, rank))
+        # one int64 key orders (rank, nxt): both lie in [-1, n), so
+        # rank * (n + 1) + nxt is exact while n < 3e9; ties are re-ranked
+        # equal, so their order does not matter
+        order = np.argsort(rank * (n + 1) + nxt)
         tmp[order[0]] = 0
         changed = (rank[order[1:]] != rank[order[:-1]]) | \
                   (nxt[order[1:]] != nxt[order[:-1]])

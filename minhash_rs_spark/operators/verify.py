@@ -9,7 +9,8 @@ collision never contaminates a cluster.
 
 Shingle sets are computed once upstream (functions/udfs.shingle_sets)
 and joined to both edge endpoints; the two joins are plain shuffle
-equi-joins on conv_id (AQE handles any hot doc)."""
+equi-joins on conv_id (AQE handles any hot doc). Every candidate edge
+is scored by the exact kernel."""
 
 from __future__ import annotations
 
@@ -19,55 +20,29 @@ from pyspark.sql import functions as F
 from minhash_rs_spark.functions.udfs import with_jaccard
 
 
-def edges_with_jaccard(edges: DataFrame, shingles: DataFrame) -> DataFrame:
-    """(src, dst) + shingle sets -> (src, dst, jaccard). Scoring is a
-    batch-vectorized mapInArrow over flat buffers (udfs.with_jaccard) —
-    no per-row Python."""
-    sh = shingles.select("conv_id", "shingles")
+def edges_with_jaccard(edges: DataFrame, src_shingles: DataFrame,
+                       dst_shingles: DataFrame) -> DataFrame:
+    """Every column of `edges` (src, dst, ...) plus the exact Jaccard of
+    the src doc's set in `src_shingles` and the dst doc's set in
+    `dst_shingles`. The two sides stay separate tables, so one conv_id
+    may carry a different set on each side (incremental dedup's batch
+    vs history). Scoring is a batch-vectorized mapInArrow over flat
+    buffers (udfs.with_jaccard) — no per-row Python."""
     joined = (
         edges
-        .join(sh.select(F.col("conv_id").alias("src"),
-                        F.col("shingles").alias("sh_src")), "src")
-        .join(sh.select(F.col("conv_id").alias("dst"),
-                        F.col("shingles").alias("sh_dst")), "dst")
-        .select("src", "dst", "sh_src", "sh_dst")
+        .join(src_shingles.select(F.col("conv_id").alias("src"),
+                                  F.col("shingles").alias("sh_src")), "src")
+        .join(dst_shingles.select(F.col("conv_id").alias("dst"),
+                                  F.col("shingles").alias("sh_dst")), "dst")
+        .select(*edges.columns, "sh_src", "sh_dst")
     )
     return with_jaccard(joined, "sh_src", "sh_dst", "jaccard")
 
 
 def verified_edges(edges: DataFrame, shingles: DataFrame,
                    threshold: float) -> DataFrame:
-    """Keep only candidate edges whose exact Jaccard >= threshold.
-
-    Exact length-ratio prefilter (the verified path's cost lever):
-    Jaccard(A,B) >= t implies |A∩B|/|A∪B| >= t with |A∩B| <= min sizes
-    and |A∪B| >= max sizes, hence min(|A|,|B|)/max(|A|,|B|) >= t. So an
-    edge failing the integer size-ratio bound PROVABLY fails the exact
-    check, and only the two int shingle counts are joined to the edge
-    list before the bound — the heavy shingle-array joins and the
-    intersection kernel run on surviving edges only. Semantics-
-    preserving by implication (identical-output planted test); the
-    1e-9 slack keeps the float comparison strictly conservative (a
-    boundary edge is verified, never dropped)."""
-    import os
-    if os.environ.get("SPARK_GRAFT_NO_RATIO_PREFILTER") == "1":
-        # measurement-only A/B hook (tools/paircap_bench.py): output is
-        # identical either way — the bound only skips provable failures
-        return (edges_with_jaccard(edges, shingles)
-                .where(F.col("jaccard") >= F.lit(threshold))
-                .select("src", "dst"))
-    sizes = shingles.select("conv_id", F.size("shingles").alias("n_sh"))
-    pre = (
-        edges
-        .join(sizes.select(F.col("conv_id").alias("src"),
-                           F.col("n_sh").alias("n_src")), "src")
-        .join(sizes.select(F.col("conv_id").alias("dst"),
-                           F.col("n_sh").alias("n_dst")), "dst")
-        .where(F.least("n_src", "n_dst").cast("double")
-               >= (F.lit(float(threshold)) - F.lit(1e-9))
-               * F.greatest("n_src", "n_dst").cast("double"))
-        .select("src", "dst"))
-    return (edges_with_jaccard(pre, shingles)
+    """Keep only candidate edges whose exact Jaccard >= threshold."""
+    return (edges_with_jaccard(edges, shingles, shingles)
             .where(F.col("jaccard") >= F.lit(threshold))
             .select("src", "dst"))
 

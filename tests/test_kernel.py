@@ -111,6 +111,26 @@ def test_jaccard():
                        np.array([], dtype=np.uint64)) == 1.0
 
 
+def test_suffix_array_matches_naive_sort_on_short_inputs():
+    """suffix_array equals a naive sort of all suffixes on inputs shorter
+    than their largest byte value (n < 256, UTF-8 bytes of non-ASCII
+    text, NUL separators, runs of one byte), where raw byte values lie
+    outside [0, n)."""
+    from minhash_rs_spark.operators.substring import suffix_array
+    rng = np.random.default_rng(11)
+    cases = [b"az\x00ch", b"zzzzzzza", b"\xff\x00\xfe", b"a",
+             "héllo\x00wörld\x00日本語".encode(), b"banana\x00ananas"]
+    cases += [rng.integers(0, 256, int(n), dtype=np.uint8).tobytes()
+              for n in rng.integers(1, 200, 30)]
+    cases += [rng.choice(np.frombuffer(b"ab\xe9", np.uint8),
+                         int(n)).tobytes()
+              for n in rng.integers(1, 200, 30)]
+    for b in cases:
+        s = np.frombuffer(b, dtype=np.uint8)
+        want = sorted(range(len(b)), key=lambda i: b[i:])
+        assert suffix_array(s).tolist() == want, b
+
+
 def test_minhash_estimates_jaccard():
     """MinHash collision probability ~ true Jaccard (sanity of the
     permutation math as an LSH family)."""
@@ -281,22 +301,34 @@ def test_band_signature_rows_exact_matches_kernel(spark):
 
 
 def test_with_jaccard_matches_scalar_kernel(spark):
-    """Vectorized batch Jaccard (lexsort + adjacent-dup count) must be
-    bit-identical to the scalar jaccard_u64 on random sets incl. empties."""
+    """Vectorized batch Jaccard ((row, value) sort + adjacent-dup count)
+    must be bit-identical to the scalar jaccard_u64 on random sets incl.
+    empties and negative longs (shingles are u64 viewed as int64), and
+    on a direct kernel call with more than 65,536 rows, where the row
+    ids no longer fit 16 bits."""
     import numpy as np
 
     from minhash_rs_spark.functions.kernel import jaccard_u64
-    from minhash_rs_spark.functions.udfs import with_jaccard
+    from minhash_rs_spark.functions.udfs import _batch_jaccard, with_jaccard
 
     rng = np.random.RandomState(7)
-    rows = []
-    for i in range(200):
-        na, nb = rng.randint(0, 12, size=2)
-        a = np.unique(rng.randint(0, 30, size=na).astype(np.int64))
+
+    def random_pair(lo, hi, size):
+        na, nb = rng.randint(0, size, size=2)
+        a = np.unique(rng.randint(lo, hi, size=na).astype(np.int64))
         # overlap with a sometimes
         b = np.unique(np.concatenate(
-            [rng.randint(0, 30, size=nb), a[:rng.randint(0, len(a) + 1)]]
+            [rng.randint(lo, hi, size=nb), a[:rng.randint(0, len(a) + 1)]]
         ).astype(np.int64)) if na or nb else np.array([], dtype=np.int64)
+        return a, b
+
+    rows = []
+    for i in range(300):
+        # pairs 200-299 hold negative longs: first around 0, then over
+        # the whole int64 range
+        lo, hi = ((0, 30) if i < 200 else (-15, 15) if i < 250
+                  else (-2**62, 2**62))
+        a, b = random_pair(lo, hi, 12)
         rows.append((i, [int(x) for x in a], [int(x) for x in b]))
     df = spark.createDataFrame(rows, "id long, a array<long>, b array<long>")
     got = {r["id"]: r["j"] for r in with_jaccard(df, "a", "b", "j").collect()}
@@ -304,6 +336,21 @@ def test_with_jaccard_matches_scalar_kernel(spark):
         want = jaccard_u64(np.array(a, dtype=np.int64).view(np.uint64),
                            np.array(b, dtype=np.int64).view(np.uint64))
         assert got[i] == want, (i, got[i], want)
+
+    n = 70_000
+    pairs = [tuple(x.view(np.uint64) for x in random_pair(-8, 8, 6))
+             for _ in range(n)]
+
+    def flat(sets):
+        lens = np.array([len(s) for s in sets], dtype=np.int64)
+        starts = np.zeros(n, dtype=np.int64)
+        np.cumsum(lens[:-1], out=starts[1:])
+        return np.concatenate(sets), starts
+
+    jac, _, _ = _batch_jaccard(*flat([a for a, _ in pairs]),
+                               *flat([b for _, b in pairs]), n)
+    want = np.array([jaccard_u64(a, b) for a, b in pairs])
+    assert np.array_equal(jac, want)
 
 
 def test_with_simhash_matches_rowwise(spark):

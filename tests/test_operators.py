@@ -1181,41 +1181,32 @@ def test_giant_block_chain_simhash(spark):
     assert len(components(chain=True)) == 1
 
 
-def test_verified_edges_prefilter_is_semantics_preserving(spark):
-    """The length-ratio prefilter (Jaccard >= t implies min/max size
-    ratio >= t) may only SKIP provably-failing edges — verified_edges
-    must equal the unfiltered score-then-threshold path on a planted
-    set that covers: a boundary pair sitting exactly at the ratio bound
-    (sizes 1:2 at t=0.5 — must still be verified, not ratio-dropped),
-    a ratio-passing pair that fails the exact check, a ratio-failing
-    pair, and an identical pair."""
-    from minhash_rs_spark.operators.verify import (edges_with_jaccard,
-                                                   verified_edges)
+def test_verified_edges_hand_computed_thresholds(spark):
+    """verified_edges keeps exactly the edges whose exact Jaccard is >=
+    t, checked against hand-computed scores: a 1:2-size pair whose
+    Jaccard is exactly 0.5 (kept at t = 0.5), a pair of equal sizes
+    that fails at 0.7, disjoint pairs of unequal sizes, and an
+    identical pair (kept at t = 1.0)."""
+    from minhash_rs_spark.operators.verify import verified_edges
 
     shingles = spark.createDataFrame(
-        [("a", [1, 2]),                      # |a|=2
-         ("b", [1, 2, 3, 4]),                # |b|=4: ratio 0.5 exactly
-         ("c", [1, 2, 3, 9]),                # vs b: ratio 1.0, jac 3/5
-         ("d", [50, 60, 70, 80, 90, 99, 98, 97]),  # vs b: ratio fails
-         ("e", [1, 2, 3, 4])],               # identical to b
+        [("a", [1, 2]),
+         ("b", [1, 2, 3, 4]),                # vs a: 2/4 = 0.5
+         ("c", [1, 2, 3, 9]),                # vs b: 3/5 = 0.6
+         ("d", [50, 60, 70, 80, 90, 99, 98, 97]),  # vs a, b: 0
+         ("e", [1, 2, 3, 4])],               # vs b: 1.0
         "conv_id string, shingles array<long>")
     edges = spark.createDataFrame(
         [("b", "a"), ("c", "b"), ("d", "b"), ("e", "b"), ("d", "a")],
         "src string, dst string")
-    for t in (0.3, 0.5, 0.7, 1.0):
-        want = {(r["src"], r["dst"]) for r in
-                edges_with_jaccard(edges, shingles)
-                .where(F.col("jaccard") >= t).collect()}
-        got = {(r["src"], r["dst"]) for r in
-               verified_edges(edges, shingles, t).collect()}
-        assert got == want, f"threshold {t}: {got} != {want}"
-    # t=0.3: (b,a) jac=2/4 passes; boundary ratio 2/4 < 0.3? no -> kept
-    # and verified. Sanity: at t=0.5 the 1:2-size pair (b,a) has ratio
-    # exactly 0.5 — the conservative epsilon must let it through to
-    # exact verification (jac = 2/4 = 0.5 passes).
-    kept = {(r["src"], r["dst"])
-            for r in verified_edges(edges, shingles, 0.5).collect()}
-    assert ("b", "a") in kept
+    want = {0.3: {("b", "a"), ("c", "b"), ("e", "b")},
+            0.5: {("b", "a"), ("c", "b"), ("e", "b")},
+            0.7: {("e", "b")},
+            1.0: {("e", "b")}}
+    for t, edge_set in want.items():
+        got = {(r["src"], r["dst"])
+               for r in verified_edges(edges, shingles, t).collect()}
+        assert got == edge_set, f"threshold {t}: {got} != {edge_set}"
 
 
 def test_cc_idx_small_input_fast_path_identical(spark, monkeypatch):
@@ -1482,6 +1473,21 @@ def test_dup_against_corpus_megabucket_cap(spark):
         assert got[0]["conv_id"] == "n1"
         assert got[0]["matched_old"] == "o000"   # global min, any cap
         assert got[0]["jaccard"] == 1.0
+
+    # a conv_id in both the batch and history, with a different set on
+    # each side and two shared bands: scored batch set vs history set
+    # (2/6), never against itself (1.0), and its band hits pass through
+    sig_schema = "conv_id string, band_id int, sig_hi long, sig_lo long"
+    sh_schema = "conv_id string, shingles array<long>"
+    both_sigs = [("x", 0, 5, 5), ("x", 1, 6, 6)]
+    got = dup_against_corpus(
+        spark.createDataFrame(both_sigs, sig_schema),
+        spark.createDataFrame(both_sigs, sig_schema),
+        spark.createDataFrame([("x", [1, 2, 3, 4])], sh_schema),
+        spark.createDataFrame([("x", [1, 2, 5, 6])], sh_schema),
+        threshold=0.3).collect()
+    assert [(r["conv_id"], r["matched_old"], r["n_band_hits"], r["jaccard"])
+            for r in got] == [("x", "x", 2, 2 / 6)]
 
 
 def test_compact_history_equals_union(spark, tmp_path):

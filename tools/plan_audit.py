@@ -288,9 +288,8 @@ def main():
                    "Cartesian" not in p and "NestedLoop" not in p))
     checks.append(("stride pairs: no Window", "Window" not in p))
 
-    # 16. verified edges: the exact length-ratio prefilter must appear
-    # as a Filter over the two INT counts (n_src/n_dst) so the heavy
-    # shingle-array joins + Arrow kernel run on surviving edges only
+    # 16. verified edges: one path — the two shingle-array joins feed
+    # the Arrow kernel directly, with no shingle-count join ahead of it
     from minhash_rs_spark.operators.verify import verified_edges
 
     sh_df = spark.createDataFrame(
@@ -299,10 +298,10 @@ def main():
     e_df = spark.createDataFrame([("b", "a"), ("c", "a")],
                                  "src string, dst string")
     p = plan_of(verified_edges(e_df, sh_df, 0.8))
-    sections.append(("verified_edges (length-ratio prefilter)", p,
-                     ["Filter"]))
-    checks.append(("verify prefilter: size-ratio filter on int counts "
-                   "in plan", "n_src" in p and "n_dst" in p))
+    sections.append(("verified_edges (exact-Jaccard kernel)", p,
+                     ["MapInArrow"]))
+    checks.append(("verify plan joins no shingle counts (n_src/n_dst "
+                   "absent)", "n_src" not in p and "n_dst" not in p))
     # formatted plans name the stage "MapInArrow (n)" in the tree and
     # "(n) MapInArrow" in the details — count tree nodes only
     checks.append(("verify kernel runs once (single Arrow map stage)",
