@@ -218,27 +218,23 @@ def rolling_poly_from_flat(flat: np.ndarray, starts: np.ndarray,
     np.cumsum(counts[:-1], out=out_starts[1:])
     out = np.empty(int(counts.sum()), dtype=U64)
 
+    short_idx = np.nonzero(lens < n)[0]
     m = total - n + 1
     if m > 0:
         acc = np.zeros(m, dtype=U64)
         for j in range(n):
             acc = acc * _POLY_B + flat[j:j + m]
-        acc = mix64(acc)
-        long_mask = lens >= n
-        if long_mask.any():
-            s_long = starts[long_mask]
-            c_long = counts[long_mask]
-            o_long = out_starts[long_mask]
-            total_long = int(c_long.sum())
-            # gather indices: for each long doc, positions s..s+c-1 in acc
-            seg_id = np.repeat(np.arange(len(c_long)), c_long)
-            within = np.arange(total_long) - np.repeat(
-                np.concatenate([[0], np.cumsum(c_long[:-1])]), c_long)
-            src_idx = s_long[seg_id] + within
-            dst_idx = o_long[seg_id] + within
-            out[dst_idx] = acc[src_idx]
+        # window p is whole iff no later doc starts in (p, p + n); the
+        # whole windows are exactly the long docs' shingles, in order,
+        # and fill every out slot but the short docs' fallbacks
+        whole = np.ones(m, dtype=bool)
+        for k in range(1, n):
+            p = starts - k
+            whole[p[(p >= 0) & (p < m)]] = False
+        slots = np.ones(len(out), dtype=bool)
+        slots[out_starts[short_idx]] = False
+        out[slots] = mix64(acc[whole])
     # short docs: single fallback shingle over all (possibly zero) tokens
-    short_idx = np.nonzero(lens < n)[0]
     for i in short_idx:
         a = U64(0)
         for j in range(int(lens[i])):

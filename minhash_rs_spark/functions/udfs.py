@@ -17,6 +17,12 @@ bounds, token hashes, shingles and dedup are whole-batch numpy:
   with_simhash(df, col)    64-bit SimHash of a shingle-array column
                            (north rule) — per-block byte histogram x
                            bit table
+  with_cosine(df, a, b)    cosine of two embedding columns — the one
+                           float64 fold (_fold) every embedding surface
+                           scores with
+
+The three with_* UDFs share one drop-and-append mapInArrow
+(_map_append).
 
 Every shingle and signature UDF reads and writes the same layout: one
 flat u64 value buffer + per-doc start offsets (the Arrow ListArray
@@ -35,7 +41,6 @@ import numpy as np
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from minhash_rs_spark.config import MinHashConfig
@@ -252,6 +257,28 @@ def _batch_jaccard(a_flat, a_starts, b_flat, b_starts, n):
     return out, inter, union
 
 
+def _map_append(df: DataFrame, drop: tuple, extra: list,
+                kernel) -> DataFrame:
+    """One mapInArrow that drops the `drop` columns and appends the
+    `extra` fields; every other column passes through untouched.
+    kernel(cols, n) gets a batch's columns by name and its row count and
+    returns a list of one array per extra field."""
+    keep = [f for f in df.schema.fields if f.name not in drop]
+    keep_names = [f.name for f in keep]
+    names = keep_names + [f.name for f in extra]
+
+    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            cols = dict(zip(rb.schema.names, rb.columns))
+            yield pa.RecordBatch.from_arrays(
+                [cols[k] for k in keep_names]
+                + kernel(cols, rb.num_rows), names=names)
+
+    return df.mapInArrow(fn, T.StructType(keep + extra))
+
+
 def with_jaccard(df: DataFrame, a_col: str, b_col: str,
                  out_col: str = "jaccard", sizes: bool = False) -> DataFrame:
     """Append exact Jaccard of two array<long> shingle columns, dropping
@@ -263,32 +290,18 @@ def with_jaccard(df: DataFrame, a_col: str, b_col: str,
     cardinalities (n_inter, n_union) from the same kernel pass — these
     are engine-portable (no float division), so an external SQL oracle
     can check the verify kernel value-for-value."""
-    keep = [f for f in df.schema.fields if f.name not in (a_col, b_col)]
     extra = [T.StructField(out_col, T.DoubleType(), False)]
     if sizes:
         extra += [T.StructField("n_inter", T.LongType(), False),
                   T.StructField("n_union", T.LongType(), False)]
-    out_schema = T.StructType(keep + extra)
-    keep_names = [f.name for f in keep]
 
-    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            cols = {name: rb.column(i)
-                    for i, name in enumerate(rb.schema.names)}
-            a_flat, a_starts = _list_flat(cols[a_col])
-            b_flat, b_starts = _list_flat(cols[b_col])
-            jac, inter, union = _batch_jaccard(a_flat, a_starts,
-                                               b_flat, b_starts, n)
-            arrays = [cols[k] for k in keep_names] + [pa.array(jac)]
-            if sizes:
-                arrays += [pa.array(inter), pa.array(union)]
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=keep_names + [f.name for f in extra])
+    def kernel(cols, n):
+        jac, inter, union = _batch_jaccard(*_list_flat(cols[a_col]),
+                                           *_list_flat(cols[b_col]), n)
+        return ([pa.array(jac), pa.array(inter), pa.array(union)] if sizes
+                else [pa.array(jac)])
 
-    return df.mapInArrow(fn, out_schema)
+    return _map_append(df, (a_col, b_col), extra, kernel)
 
 
 # Values per block of _simhash_flat, and docs per block: a block's vote
@@ -344,36 +357,67 @@ def with_simhash(df: DataFrame, shingles_col: str = "shingles",
     flat value buffer, one bincount of (doc, byte position, byte value)
     times a 256 x 8 bit table gives every doc's 64 bit votes — no
     per-row Python. North-rule addition, no reference counterpart."""
-    keep = [f for f in df.schema.fields if f.name != shingles_col]
-    out_schema = T.StructType(keep + [T.StructField(out_col,
-                                                    T.LongType(), False)])
-    keep_names = [f.name for f in keep]
 
-    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            cols = {name: rb.column(i)
-                    for i, name in enumerate(rb.schema.names)}
-            flat, starts = _list_flat(cols[shingles_col])
-            lens = np.empty(n, dtype=np.int64)
-            lens[:-1] = starts[1:] - starts[:-1]
-            lens[-1] = len(flat) - starts[-1]
-            sig = _simhash_flat(flat, starts, lens)
-            yield pa.RecordBatch.from_arrays(
-                [cols[k] for k in keep_names]
-                + [pa.array(sig.view(np.int64))],
-                names=keep_names + [out_col])
+    def kernel(cols, n):
+        flat, starts = _list_flat(cols[shingles_col])
+        lens = np.diff(starts, append=len(flat))
+        return [pa.array(_simhash_flat(flat, starts, lens).view(np.int64))]
 
-    return df.mapInArrow(fn, out_schema)
+    return _map_append(df, (shingles_col,),
+                       [T.StructField(out_col, T.LongType(), False)], kernel)
 
 
-def cosine_expr(a, b):
-    """JVM-side cosine similarity between two array<float/double> columns —
-    F.zip_with dot product + F.aggregate norms; no Python."""
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x * x))
-    return dot / (na * nb)
+def _list_matrix(lst) -> np.ndarray:
+    """Arrow list<float/double> column -> (n, d) numpy matrix in the
+    NATIVE element dtype (bits untouched). Raises on ragged rows and on
+    NULL rows/elements: a null element would silently become NaN in the
+    numpy view and score like a zero-norm vector instead of failing."""
+    if isinstance(lst, pa.ChunkedArray):  # pragma: no cover
+        lst = lst.combine_chunks()
+    if lst.null_count or lst.values.null_count:
+        raise ValueError(
+            "NULL embedding rows/elements are not supported — filter "
+            "nulls before scoring")
+    offs = lst.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    vals = lst.values.to_numpy(zero_copy_only=False)
+    vals = vals[offs[0]:offs[-1]]
+    n = len(offs) - 1
+    if n == 0:
+        return vals.reshape(0, 0)
+    lens = np.diff(offs)
+    if not (lens == lens[0]).all():
+        raise ValueError("ragged embedding lengths in batch")
+    return np.ascontiguousarray(vals.reshape(n, int(lens[0])))
+
+
+def _fold(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Dot products over the last axis, broadcasting the others: each
+    product in the native element dtype (float32 for array<float>), then
+    a left-to-right float64 sum over the dimension. The one cosine
+    arithmetic of every embedding surface — _fold(A, B) for row pairs,
+    _fold(Q[:, None], C[None]) for a query x candidate block,
+    sqrt(_fold(A, A)) for norms — so all of them rank identically."""
+    acc = np.zeros(np.broadcast_shapes(A.shape[:-1], B.shape[:-1]))
+    for j in range(A.shape[-1]):
+        acc += A[..., j] * B[..., j]
+    return acc
+
+
+def with_cosine(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    """Append `cos_sim`, the cosine of two array<float/double> columns
+    row by row (_fold), and drop them. A zero-norm vector gives NaN,
+    which Spark orders above every double — a threshold filter must
+    drop it explicitly. NULL or ragged vectors raise (_list_matrix)."""
+
+    def kernel(cols, n):
+        A, B = _list_matrix(cols[a_col]), _list_matrix(cols[b_col])
+        if A.shape != B.shape:
+            raise ValueError(f"embedding dimensions differ: {A.shape[1]} "
+                             f"vs {B.shape[1]}")
+        with np.errstate(divide="ignore", invalid="ignore"):
+            return [pa.array(_fold(A, B) / (np.sqrt(_fold(A, A))
+                                            * np.sqrt(_fold(B, B))))]
+
+    return _map_append(df, (a_col, b_col),
+                       [T.StructField("cos_sim", T.DoubleType(), False)],
+                       kernel)

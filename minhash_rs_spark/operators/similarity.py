@@ -2,11 +2,13 @@
 array<float> — brute-force cosine top-k baseline + an LSH-bucketed
 scale path).
 
-Scoring is JVM-side (zip_with/aggregate dot products); bucketing is one
-batched numpy matmul per Arrow batch. At 100 TB scale:
+Every surface scores cosine with one numpy fold (udfs._fold): row
+pairs produced by the surface's own joins go through udfs.with_cosine,
+query x candidate blocks through _arrow_topk. Bucketing is one batched
+numpy matmul per Arrow batch. At 100 TB scale:
   - brute-force: broadcast the (small) query set, scan candidates once,
-    per-partition top-k via window; O(|Q| * N) dot products but a single
-    pass, no shuffle of the big side until the final top-k agg. The
+    per-batch partial top-k, exact rank via window; O(|Q| * N) dot
+    products but a single pass, no shuffle of the big side. The
     all-pairs variant (cosine_near_dup_pairs method="brute") is the
     exact small-scale baseline only.
   - multi-table random-hyperplane sign-LSH (Charikar 2002): num_tables
@@ -24,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from minhash_rs_spark.functions.udfs import cosine_expr
+from minhash_rs_spark.functions.udfs import _fold, _list_matrix, with_cosine
 
 
 def _ranked_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -36,61 +38,11 @@ def _ranked_topk(scored: DataFrame, k: int) -> DataFrame:
                     F.round("cos_sim", 6).alias("cos_sim_r")))
 
 
-def _list_matrix(lst, pa):
-    """Arrow list<float/double> column -> (n, d) numpy matrix in the
-    NATIVE element dtype (bits untouched). Raises on ragged rows and on
-    NULL rows/elements: a null element would silently become NaN in the
-    numpy view and rank FIRST (NaN sorts greatest) where the JVM plan's
-    null cosine ranked LAST — fail loudly instead of diverging."""
-    import numpy as np
-
-    if isinstance(lst, pa.ChunkedArray):  # pragma: no cover
-        lst = lst.combine_chunks()
-    if lst.null_count or lst.values.null_count:
-        raise ValueError(
-            "_arrow_topk: NULL embedding rows/elements are not supported "
-            "(the batch kernel cannot reproduce the JVM null-cosine "
-            "ordering) — filter nulls before calling topk")
-    offs = lst.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-    vals = lst.values.to_numpy(zero_copy_only=False)
-    vals = vals[offs[0]:offs[-1]]
-    n = len(offs) - 1
-    if n == 0:
-        return vals.reshape(0, 0)
-    lens = np.diff(offs)
-    if not (lens == lens[0]).all():
-        raise ValueError("ragged embedding lengths in batch")
-    return np.ascontiguousarray(vals.reshape(n, int(lens[0])))
-
-
-def _fold_dots(A, B):
-    """(n, d) x (m, d) -> (n, m) float64 dot products with EXACTLY the
-    JVM cosine_expr arithmetic: per-element product in the native
-    element dtype (float32 for array<float>), then a left-to-right
-    float64 fold over dim — bitwise identical to
-    aggregate(zip_with(a, b, x*y), 0.0D, acc + x), so rank order is
-    inherited from the proven-hash-matching JVM path, not re-derived."""
-    import numpy as np
-
-    acc = np.zeros((A.shape[0], B.shape[0]))
-    for j in range(A.shape[1]):
-        acc += A[:, j, None] * B[None, :, j]
-    return acc
-
-
-def _fold_norms(A):
-    """sqrt(sum x*x) with the same native-dtype square + float64 fold."""
-    import numpy as np
-
-    acc = np.zeros(A.shape[0])
-    for j in range(A.shape[1]):
-        acc += A[:, j] * A[:, j]
-    return np.sqrt(acc)
-
-
 def _np_sign_bucket(M, n_bits: int):
-    """numpy twin of _sign_bucket: b = fold(b*2 + (x_i >= 0)) over the
-    first n_bits components (NaN compares false on both engines)."""
+    """Bucket key: the sign bits of the first n_bits components as an
+    int, b = fold(b*2 + (x_i >= 0)) — the embedding_lsh_topk oracle's
+    CASE WHEN x_i >= 0 bucket (-0.0 counts as non-negative; NaN compares
+    false on both engines)."""
     import numpy as np
 
     b = np.zeros(M.shape[0], dtype=np.int64)
@@ -115,11 +67,11 @@ def _arrow_topk(embeddings: DataFrame, k: int, query_mod: int,
     dropped); the final exact rank is a window over the tiny partial
     set (|Q| * ~k per batch). No shuffle ever carries a vector.
 
-    Float semantics are bitwise-identical to the old cosine_expr plan
-    (_fold_dots/_fold_norms), so the output — and the DuckDB oracle
-    hash — is unchanged. NaN cosines (zero-norm vectors) sort first on
-    both paths (Spark treats NaN as greater than any double; the
-    in-kernel select key maps NaN to +inf)."""
+    Scores come from udfs._fold, the arithmetic with_cosine uses on the
+    join-based surfaces, so every surface ranks alike. NaN cosines
+    (zero-norm vectors) sort first, as on those surfaces (Spark treats
+    NaN as greater than any double; the in-kernel select key maps NaN
+    to +inf)."""
     import numpy as np
 
     spark = embeddings.sparkSession
@@ -141,7 +93,7 @@ def _arrow_topk(embeddings: DataFrame, k: int, query_mod: int,
         partial = spark.createDataFrame([], out_schema)
         return _ranked_topk(partial, k)
     qids = q_tbl.column("qid").to_numpy(zero_copy_only=False)
-    Q = _list_matrix(q_tbl.column("qv"), pa)
+    Q = _list_matrix(q_tbl.column("qv"))
     order = np.argsort(qids)
     qids, Q = qids[order], np.ascontiguousarray(Q[order])
     if n_bits is not None and n_bits > Q.shape[1]:
@@ -149,7 +101,7 @@ def _arrow_topk(embeddings: DataFrame, k: int, query_mod: int,
             f"n_bits={n_bits} exceeds the embedding dimension "
             f"{Q.shape[1]}: the sign bucket reads the first n_bits "
             "components")
-    qn = _fold_norms(Q)
+    qn = np.sqrt(_fold(Q, Q))
     qb = _np_sign_bucket(Q, n_bits) if n_bits is not None else None
     nq = len(qids)
     # executor-side broadcast of the query matrices (not a closure
@@ -166,7 +118,7 @@ def _arrow_topk(embeddings: DataFrame, k: int, query_mod: int,
     def score_topk(Qs, qns, qidss, Cs, cns, idcs):
         """Per-(query-slice x candidate-slice) exact scoring + top-k
         (with boundary ties) selection. Returns (qi, ci, cos)."""
-        cos = _fold_dots(Qs, Cs) / (qns[:, None] * cns[None, :])
+        cos = _fold(Qs[:, None], Cs[None]) / (qns[:, None] * cns[None, :])
         valid = qidss[:, None] != idcs[None, :]
         keys = np.where(valid, np.where(np.isnan(cos), np.inf, cos),
                         -np.inf)
@@ -186,11 +138,11 @@ def _arrow_topk(embeddings: DataFrame, k: int, query_mod: int,
             if n == 0:
                 continue
             ids = rb.column(0).to_numpy(zero_copy_only=False)
-            C = _list_matrix(rb.column(1), pa)
+            C = _list_matrix(rb.column(1))
             for c0 in range(0, n, chunk):
                 Cc = C[c0:c0 + chunk]
                 idc = ids[c0:c0 + chunk]
-                cn = _fold_norms(Cc)
+                cn = np.sqrt(_fold(Cc, Cc))
                 if qb is None:
                     qi, ci, cos = score_topk(Q, qn, qids, Cc, cn, idc)
                     out_q, out_c = qids[qi], idc[ci]
@@ -255,14 +207,6 @@ def brute_force_topk(embeddings: DataFrame, k: int = 5,
     return _arrow_topk(embeddings, k, query_mod, id_col, vec_col)
 
 
-def _sign_bucket(vec, n_bits: int):
-    """Bucket key: sign bits of the first n_bits components, as an int."""
-    b = F.lit(0)
-    for i in range(n_bits):
-        b = b * 2 + F.when(F.element_at(vec, i + 1) >= 0, 1).otherwise(0)
-    return b
-
-
 def lsh_topk(embeddings: DataFrame, k: int = 5, query_mod: int = 50,
              n_bits: int = 4, id_col: str = "vec_id",
              vec_col: str = "embedding") -> DataFrame:
@@ -277,10 +221,9 @@ def lsh_topk(embeddings: DataFrame, k: int = 5, query_mod: int = 50,
     has unbounded misses for vectors near axis hyperplanes and no
     recall knob.
 
-    Round 7: same _arrow_topk kernel as brute_force_topk with the
-    bucket-equality mask applied in-batch (_np_sign_bucket is the
-    numpy twin of _sign_bucket; identical >= 0 semantics incl. -0.0
-    and NaN) — replaces the bucket equi-join + per-pair JVM cosine.
+    Round 7: same _arrow_topk kernel as brute_force_topk, scoring only
+    within matching _np_sign_bucket buckets — replaces the bucket
+    equi-join + per-pair JVM cosine.
 
     NULL embedding rows or elements fail loudly (ValueError) rather
     than rank; filter them before calling. n_bits larger than the
@@ -321,16 +264,18 @@ def cosine_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.45,
     all-zeros embedding crowd would otherwise produce a quadratic
     bucket). At scale, size n_bits so E[bucket] = N / 2^n_bits stays
     in the hundreds instead.
+
+    Both methods score pairs with udfs.with_cosine. A pair with a
+    zero-norm vector scores NaN and is never a near-dup; NULL or
+    ragged embeddings raise ValueError.
     """
     if method == "brute":
         a = embeddings.select(F.col(id_col).alias("vec_a"),
                               F.col(vec_col).alias("va"))
         b = embeddings.select(F.col(id_col).alias("vec_b"),
                               F.col(vec_col).alias("vb"))
-        return (a.crossJoin(b)
-                .where(F.col("vec_a") < F.col("vec_b"))
-                .where(cosine_expr(F.col("va"), F.col("vb")) >= F.lit(threshold))
-                .select("vec_a", "vec_b"))
+        return _near_dups(a.crossJoin(b)
+                          .where(F.col("vec_a") < F.col("vec_b")), threshold)
     if method != "lsh":
         raise ValueError(f"unknown method {method!r}")
 
@@ -351,12 +296,21 @@ def cosine_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.45,
                     F.col(f"y.{id_col}").alias("vec_b"))
             .distinct())
     e = embeddings.select(F.col(id_col), F.col(vec_col))
-    return (cand
-            .join(e.select(F.col(id_col).alias("vec_a"),
-                           F.col(vec_col).alias("va")), "vec_a")
-            .join(e.select(F.col(id_col).alias("vec_b"),
-                           F.col(vec_col).alias("vb")), "vec_b")
-            .where(cosine_expr(F.col("va"), F.col("vb")) >= F.lit(threshold))
+    return _near_dups(cand
+                      .join(e.select(F.col(id_col).alias("vec_a"),
+                                     F.col(vec_col).alias("va")), "vec_a")
+                      .join(e.select(F.col(id_col).alias("vec_b"),
+                                     F.col(vec_col).alias("vb")), "vec_b"),
+                      threshold)
+
+
+def _near_dups(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(vec_a, va, vec_b, vb) pairs -> the (vec_a, vec_b) ids with cosine
+    >= threshold. NaN (a zero-norm side) is dropped explicitly: Spark
+    orders NaN above every double, so `>=` alone would keep it."""
+    cos = F.col("cos_sim")
+    return (with_cosine(pairs, "va", "vb")
+            .where(~F.isnan(cos) & (cos >= F.lit(threshold)))
             .select("vec_a", "vec_b"))
 
 
@@ -400,7 +354,9 @@ def hyperplane_buckets(embeddings: DataFrame, planes, n_bits: int,
     table. The projection is one batched numpy matmul per Arrow batch
     (mapInArrow, flat-buffer zero-copy in) — no per-row Python, no JVM
     expression blowup (n_bits * num_tables * dim literals would
-    otherwise be folded into the plan)."""
+    otherwise be folded into the plan). NULL or ragged embeddings raise
+    ValueError (_list_matrix); a zero vector lands in the all-ones
+    bucket of every table."""
     import numpy as np
     import pyarrow as pa
 
@@ -420,13 +376,7 @@ def hyperplane_buckets(embeddings: DataFrame, planes, n_bits: int,
             if n == 0:
                 continue
             ids = rb.column(0).to_numpy(zero_copy_only=False)
-            lst = rb.column(1)
-            if isinstance(lst, pa.ChunkedArray):  # pragma: no cover
-                lst = lst.combine_chunks()
-            offs = lst.offsets.to_numpy(zero_copy_only=False)
-            flat = lst.values.to_numpy(zero_copy_only=False)
-            dim = planes_t.shape[0]
-            E = flat[offs[0]:offs[-1]].reshape(n, dim).astype(np.float32)
+            E = _list_matrix(rb.column(1)).astype(np.float32, copy=False)
             signs = (E @ planes_t) >= 0  # (n, T*b)
             buckets = (signs.reshape(n, -1, n_bits).astype(np.int64)
                        @ powers)  # (n, T)
@@ -483,14 +433,12 @@ def ann_topk(embeddings: DataFrame, k: int = 5, query_mod: int = 50,
             .distinct())
     e = embeddings.select(F.col(id_col).cast("long").alias(id_col),
                           F.col(vec_col))
-    scored = (cand
-              .join(e.select(F.col(id_col).alias("query_id"),
-                             F.col(vec_col).alias("qv")), "query_id")
-              .join(e.select(F.col(id_col).alias("neighbor_id"),
-                             F.col(vec_col).alias("cv")), "neighbor_id")
-              .select("query_id", "neighbor_id",
-                      cosine_expr(F.col("qv"), F.col("cv")).alias("cos_sim")))
-    return _ranked_topk(scored, k)
+    pairs = (cand
+             .join(e.select(F.col(id_col).alias("query_id"),
+                            F.col(vec_col).alias("qv")), "query_id")
+             .join(e.select(F.col(id_col).alias("neighbor_id"),
+                            F.col(vec_col).alias("cv")), "neighbor_id"))
+    return _ranked_topk(with_cosine(pairs, "qv", "cv"), k)
 
 
 # ---------------------------------------------------------------------
@@ -519,15 +467,11 @@ def ivf_cells(embeddings: DataFrame, n_cells: int = 16,
     cents = (embeddings.orderBy(id_col).limit(n_cells)
              .select(F.col(id_col).alias("cell_id"),
                      F.col(vec_col).alias("cv")))
-    scored = (embeddings.select(F.col(id_col), F.col(vec_col))
-              .crossJoin(F.broadcast(cents))
-              .select(id_col,
-                      "cell_id",
-                      cosine_expr(F.col(vec_col), F.col("cv"))
-                      .alias("_cs")))
+    scored = with_cosine(embeddings.select(F.col(id_col), F.col(vec_col))
+                         .crossJoin(F.broadcast(cents)), vec_col, "cv")
     asg = (scored.groupBy(id_col)
            .agg(F.min_by("cell_id",
-                         F.struct((-F.col("_cs")).alias("_ncs"),
+                         F.struct((-F.col("cos_sim")).alias("_ncs"),
                                   F.col("cell_id"))).alias("cell_id")))
     return cents, asg
 
@@ -553,10 +497,10 @@ def ivf_topk(embeddings: DataFrame, k: int = 5, query_mod: int = 50,
          .select(F.col(id_col).alias("query_id"),
                  F.col(vec_col).alias("qv")))
     probe_rank = Window.partitionBy("query_id").orderBy(
-        F.col("_cs").desc(), F.col("cell_id"))
-    probes = (q.crossJoin(F.broadcast(cents))
-              .select("query_id", "qv", "cell_id",
-                      cosine_expr(F.col("qv"), F.col("cv")).alias("_cs"))
+        F.col("cos_sim").desc(), F.col("cell_id"))
+    # with_cosine consumes both vectors; score a copy so qv rides on
+    probes = (with_cosine(q.crossJoin(F.broadcast(cents))
+                          .withColumn("_qv", F.col("qv")), "_qv", "cv")
               .withColumn("_pr", F.row_number().over(probe_rank))
               .where(F.col("_pr") <= nprobe)
               .select("query_id", "qv", "cell_id"))
@@ -565,17 +509,11 @@ def ivf_topk(embeddings: DataFrame, k: int = 5, query_mod: int = 50,
         F.col(vec_col).alias("cv2")),
         asg[id_col] == F.col("neighbor_id"))
         .select("cell_id", "neighbor_id", "cv2"))
-    scored = (probes.join(members, "cell_id")
-              .where(F.col("query_id") != F.col("neighbor_id"))
-              # a member can sit in several probed cells only if cells
-              # were duplicated — they aren't (one cell per vector) —
-              # so no dedup needed before ranking
-              .select("query_id", "neighbor_id",
-                      cosine_expr(F.col("qv"), F.col("cv2"))
-                      .alias("cos_sim")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id",
-                    F.col("rank").cast("long").alias("rank")))
+    # a member can sit in several probed cells only if cells were
+    # duplicated — they aren't (one cell per vector) — so no dedup is
+    # needed before ranking
+    scored = with_cosine(probes.join(members, "cell_id")
+                         .where(F.col("query_id") != F.col("neighbor_id")),
+                         "qv", "cv2")
+    return _ranked_topk(scored, k).select(
+        "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"))

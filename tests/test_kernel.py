@@ -176,9 +176,10 @@ def test_xxhash64_tokens_matches_scalar():
 
 
 def test_flat_rolling_and_unique_match_per_doc():
-    """Batch rolling shingles and per-doc dedup == per-doc scalar, on
-    100 random docs and on 70,000 tiny docs over a 3-token alphabet
-    (repeated shingles; doc ids too wide for 16 bits)."""
+    """Batch rolling shingles and per-doc dedup == per-doc scalar, for
+    ngram sizes 1, 2, 5 and 9, on 100 random docs and on 70,000 tiny
+    docs over a 3-token alphabet (repeated shingles; empty and short
+    docs between long ones; doc ids too wide for 16 bits)."""
     rng = np.random.default_rng(3)
     inputs = [
         [rng.integers(0, 2 ** 63, rng.integers(0, 25)).astype(np.uint64)
@@ -191,15 +192,16 @@ def test_flat_rolling_and_unique_match_per_doc():
         lens = np.array([len(d) for d in docs])
         np.cumsum(lens[:-1], out=starts[1:])
         flat = np.concatenate(docs)
-        sh_flat, sh_starts = H.rolling_poly_from_flat(flat, starts, 5)
-        ends = np.concatenate([sh_starts[1:], [len(sh_flat)]])
-        u_flat, u_starts = H.unique_per_doc(sh_flat, sh_starts)
-        uends = np.concatenate([u_starts[1:], [len(u_flat)]])
-        for i, d in enumerate(docs):
-            assert np.array_equal(sh_flat[sh_starts[i]:ends[i]],
-                                  H.rolling_poly_hashes(d, 5))
-            assert np.array_equal(u_flat[u_starts[i]:uends[i]],
-                                  np.unique(H.rolling_poly_hashes(d, 5)))
+        for n in (1, 2, 5, 9):
+            sh_flat, sh_starts = H.rolling_poly_from_flat(flat, starts, n)
+            ends = np.concatenate([sh_starts[1:], [len(sh_flat)]])
+            u_flat, u_starts = H.unique_per_doc(sh_flat, sh_starts)
+            uends = np.concatenate([u_starts[1:], [len(u_flat)]])
+            for i, d in enumerate(docs):
+                want = H.rolling_poly_hashes(d, n)
+                assert np.array_equal(sh_flat[sh_starts[i]:ends[i]], want)
+                assert np.array_equal(u_flat[u_starts[i]:uends[i]],
+                                      np.unique(want))
 
 
 # What the batch tokenizer's cleaning shortcuts must get right: Unicode

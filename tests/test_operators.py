@@ -398,6 +398,72 @@ def test_lsh_topk_rejects_n_bits_above_dim(spark):
     with pytest.raises(ValueError, match=r"n_bits=4 .*dimension 3"):
         lsh_topk(emb, k=2, query_mod=2, n_bits=4)
 
+
+def test_zero_vectors_score_nan_and_ragged_rows_raise(spark):
+    """Two zero vectors among real ones: every cosine surface scores
+    them NaN instead of raising DIVIDE_BY_ZERO. The topk surfaces rank
+    NaN first (Spark orders NaN above every double); near-dup pairs
+    never include a NaN pair, so both methods give exactly the real
+    pairs. Ragged rows whose lengths happen to sum to n * dim raise
+    instead of being bucketed."""
+    from minhash_rs_spark.operators.similarity import (
+        ann_topk,
+        brute_force_topk,
+        cosine_near_dup_pairs,
+        hyperplane_buckets,
+        hyperplanes,
+        ivf_topk,
+    )
+
+    rng = np.random.default_rng(11)
+    vecs = rng.standard_normal((40, 8)).astype(np.float32)
+    vecs[20:30] = vecs[:10] + 0.05 * rng.standard_normal((10, 8))
+    zeros = {20, 30}
+    vecs[sorted(zeros)] = 0.0
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>")
+    unit = vecs / np.maximum(np.linalg.norm(vecs, axis=1), 1e-30)[:, None]
+    cos = unit.astype(np.float64) @ unit.T.astype(np.float64)
+    want = {(a, b) for a in range(40) for b in range(a + 1, 40)
+            if not {a, b} & zeros and cos[a, b] >= 0.9}
+    assert len(want) >= 8
+
+    for method in ("brute", "lsh"):
+        got = {tuple(r) for r in cosine_near_dup_pairs(
+            emb, 0.9, method=method, n_bits=2, num_tables=16).collect()}
+        assert got == want, method
+
+    def ranked(rows):
+        return {(r["query_id"], r["rank"]): r["neighbor_id"] for r in rows}
+
+    def best(q):
+        return max((i for i in range(40) if i != q and i not in zeros),
+                   key=lambda i: cos[q, i])
+
+    bf = brute_force_topk(emb, k=3, query_mod=10).collect()
+    ann = ann_topk(emb, k=3, query_mod=10, n_bits=2, num_tables=16).collect()
+    for r in bf + ann:
+        assert (np.isnan(r["cos_sim_r"])
+                == bool({r["query_id"], r["neighbor_id"]} & zeros)), r
+    # NaN ranks first, NaN ties by neighbor id
+    assert ranked(bf) == {
+        (0, 1): 20, (0, 2): 30, (0, 3): best(0),
+        (10, 1): 20, (10, 2): 30, (10, 3): best(10),
+        (20, 1): 0, (20, 2): 1, (20, 3): 2,
+        (30, 1): 0, (30, 2): 1, (30, 3): 2}
+    # the two zero vectors share every bucket, so they have candidates
+    assert {r["query_id"] for r in ann} == {0, 10, 20, 30}
+    # every cell probed: IVF degenerates to the exact brute ranking
+    assert ranked(ivf_topk(emb, k=3, query_mod=10, n_cells=4,
+                           nprobe=4).collect()) == ranked(bf)
+
+    ragged = spark.createDataFrame(
+        [(0, [1.0] * 7), (1, [1.0] * 9)],
+        "vec_id long, embedding array<float>").coalesce(1)
+    with pytest.raises(Exception, match="ragged embedding lengths"):
+        hyperplane_buckets(ragged, hyperplanes(8, 2, 1), 2, 1).collect()
+
 # ---- multimodal plumbing ----
 
 def test_multimodal_stub(spark):
